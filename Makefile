@@ -2,7 +2,7 @@
 # reference Makefile:33-36 runs tests with search mocked — here the
 # oracle takes that role and needs nothing external).
 
-.PHONY: test test-fast selfcheck bench scaling package submit-smoke
+.PHONY: test test-fast selfcheck bench perfbench scaling package submit-smoke
 
 # zip for spark-submit --py-files on a real cluster
 package:
@@ -32,6 +32,14 @@ selfcheck:
 
 bench:
 	python bench.py
+
+# end-to-end benchmark, both workloads, one JSON line each (see
+# perfbench/README.md); e.g. `make perfbench SEED=3 TRACE=1`
+SEED ?= 1
+TRACE ?= 0
+perfbench:
+	python3 perfbench/run.py --workload search-hot --seed $(SEED) --seconds 10 --trace $(TRACE)
+	python3 perfbench/run.py --workload ingest --seed $(SEED) --seconds 10 --trace $(TRACE)
 
 scaling:
 	python scripts/scaling.py --n 2 --sf 100

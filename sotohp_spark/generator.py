@@ -141,14 +141,6 @@ def transcripts_df(spark: SparkSession, sf: float, seed: int = 42) -> DataFrame:
     return spark.createDataFrame(pdf, schema=TRANSCRIPT_SCHEMA)
 
 
-def write_transcripts(
-    spark: SparkSession, sf: float, path: str, seed: int = 42, partitions: int = 32
-) -> str:
-    df = transcripts_df(spark, sf, seed)
-    df.repartition(partitions, "conv_id").write.mode("overwrite").parquet(path)
-    return path
-
-
 # ---------------------------------------------------------------------------
 # Reference query set (~50 deterministic queries; see FIXTURES.md §3)
 # ---------------------------------------------------------------------------

@@ -49,6 +49,9 @@ TOPK_SCHEMA = T.StructType(
     ]
 )
 
+# the with_docs result columns, in order (_attach_docs / _hits_schema)
+HITS_COLUMNS = ("doc_id", "conv_id", "score", "doc_ts", "n_turns", "doc_len")
+
 
 from dataclasses import dataclass  # noqa: E402
 
@@ -317,6 +320,13 @@ class QueryEngine:
         # collect per query (the ES search-tier in-heap postings
         # posture).  Rows are never mutated by scoring (shared safely).
         self._driver_shards: dict | None = None
+        # driver-tier docs metadata beside the shard rows (see
+        # cache_postings and _driver_docs_tier): the doc_id-sorted
+        # HITS_COLUMNS minus score, or None while off.  _driver_docs_room
+        # is the budget the shard rows left for it, None once tried.
+        self._driver_docs: pd.DataFrame | None = None
+        self._driver_docs_room: int | None = None
+        self._hits_struct: T.StructType | None = None
         self._term_stats = store.read_term_stats()
         self._df_cache: dict | None = None
         # explicit projection -> the tfs map column (kept for the
@@ -498,11 +508,24 @@ class QueryEngine:
         (phrase-heavy serving); cached batches are columnar, so scoring
         reads of the cached frame still skip the pos columns.
 
+        Driver tiers (``top_terms=None`` only): when the whole scoring
+        payload fits DRIVER_POSTINGS_CACHE_MAX_BYTES, the shard rows are
+        pinned in driver memory too, and what they leave of that budget
+        is reserved for the docs metadata (doc_id, conv_id, doc_ts,
+        n_turns, doc_len — never text/tfs).  The docs tier is filled by
+        the first ``with_docs`` query on the driver-local path, not
+        here, and stays off when the collected projection does not fit
+        the remainder.  With both tiers on a warm ``with_docs`` top-k
+        runs no Spark job; with only the shard tier its metadata comes
+        from the docs join.
+
         Returns the number of cached shard rows (materializes the
-        cache).  Re-invocation releases the previous pin first."""
+        cache).  Re-invocation releases the previous pin (both driver
+        tiers included) first."""
         if self._postings_hot is not None:
             self._postings_hot.unpersist()
         self._driver_shards = None
+        self._driver_docs = self._driver_docs_room = None
         base = self._postings if include_positions else self._postings_scoring
         if top_terms is None:
             self._hot_terms = None
@@ -542,6 +565,9 @@ class QueryEngine:
                 for r in scoring_view.collect():
                     cache.setdefault(r["term"], []).append(r.asDict())
                 self._driver_shards = cache
+                self._driver_docs_room = (
+                    self.DRIVER_POSTINGS_CACHE_MAX_BYTES - total_payload
+                )
             # pin the docs METADATA projection too (doc_id, conv_id,
             # doc_ts, n_turns, doc_len — never text/tfs): every
             # sort/collapse/agg surface joins it per query.  Bounded
@@ -846,8 +872,7 @@ class QueryEngine:
         if ts_min is not None or ts_max is not None:
             doc_bounds = self._doc_bounds_for_ts(ts_min, ts_max)
             if doc_bounds is None:
-                out = self.spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-                return self._attach_docs(out) if with_docs else out
+                return self._empty_hits(with_docs)
         if _weights is not None:
             # internal: caller supplies ready (term -> weight) pairs of
             # KNOWN corpus terms (more_like_this) — no re-tokenization,
@@ -858,7 +883,6 @@ class QueryEngine:
             )
         else:
             weights, n_candidates = self.query_weights(query_text, source)
-        spark = self.spark
         if conjunctive and len(weights) < len(
             set(tokenize(query_text, self._query_rules(source)))
         ):
@@ -866,8 +890,7 @@ class QueryEngine:
             # 108-112): a query term absent from the corpus empties the result
             weights = {}
         if not weights:
-            out = spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-            return self._attach_docs(out) if with_docs else out
+            return self._empty_hits(with_docs)
 
         # internal (top_k_multi_match most_fields): per-term avgdl
         # for field-tagged keys — the kernel normalizes each key
@@ -887,8 +910,7 @@ class QueryEngine:
             if min_match > n_terms:
                 # fewer present terms than required matches: provably
                 # empty (a clause on an absent term matches no doc)
-                out = spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-                return self._attach_docs(out) if with_docs else out
+                return self._empty_hits(with_docs)
             if min_match <= 1:
                 min_match = None  # plain disjunction
 
@@ -909,8 +931,7 @@ class QueryEngine:
             if conjunctive and excl_terms & set(terms):
                 # must + must_not on the same term: every doc matching
                 # all positives contains it, hence is excluded
-                out = spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-                return self._attach_docs(out) if with_docs else out
+                return self._empty_hits(with_docs)
             # excluded postings are collected/decoded too — they count
             # against the driver-local gate like candidate postings
             n_candidates += sum(excl_dfs[t] for t in excl_terms)
@@ -938,16 +959,15 @@ class QueryEngine:
         ):
             try:
                 use_driver = self._driver_shards is not None
-                out = self._top_k_local(
+                return self._top_k_local(
                     None if use_driver else _build_shards(),
                     weights, k, avgdl, conjunctive, doc_bounds,
                     cursor=search_after, excl_terms=excl_terms,
                     min_match=min_match, bool_spec=_bool_spec,
-                    terms_all=terms_all,
+                    terms_all=terms_all, with_docs=with_docs,
                 )
             finally:
                 self._local_gate.release()
-            return self._attach_docs(out) if with_docs else out
         shards = _build_shards()
         if conjunctive:
             # ranges lacking any query term can't contribute
@@ -1044,12 +1064,6 @@ class QueryEngine:
                 "(must_not/filter alone is unranked membership — use "
                 "matching_doc_ids or a docs-table filter)"
             )
-        spark = self.spark
-
-        def _empty():
-            out = spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-            return self._attach_docs(out) if with_docs else out
-
         rules = self._query_rules(source)
 
         # field set: None = the plain text stream (keys == tokens);
@@ -1123,7 +1137,7 @@ class QueryEngine:
             present = {t: c for t, c in qtf.items() if dfs.get(t)}
             if not present:
                 # a required clause with no corpus term matches nothing
-                return _empty()
+                return self._empty_hits(with_docs)
             must_groups.append((present, boost))
 
         msm = q.minimum_should_match
@@ -1144,9 +1158,9 @@ class QueryEngine:
             if present:
                 should_groups.append((present, boost))
         if msm > 0 and len(should_groups) < msm:
-            return _empty()
+            return self._empty_hits(with_docs)
         if not must_groups and not should_groups:
-            return _empty()
+            return self._empty_hits(with_docs)
 
         n = self.meta["n_docs"]
         weights: dict[str, float] = {}
@@ -1641,8 +1655,7 @@ class QueryEngine:
             texts_given=texts is not None,
         )
         if unmatchable:
-            out = self.spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-            return self._attach_docs(out) if with_docs else out
+            return self._empty_hits(with_docs)
 
         if not must and not should:
             if texts is not None and phrases_must:
@@ -1670,8 +1683,7 @@ class QueryEngine:
                     .limit(k)
                 )
                 return self._attach_docs(out) if with_docs else out
-            out = self.spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-            return self._attach_docs(out) if with_docs else out
+            return self._empty_hits(with_docs)
 
         q = Bool(
             must=tuple(must), should=tuple(should),
@@ -1767,8 +1779,7 @@ class QueryEngine:
         hit from EVERY group (any member), never every member."""
         q = self.synonyms_bool(query_text, synonyms, operator, source)
         if not q.must and not q.should:
-            out = self.spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-            return self._attach_docs(out) if with_docs else out
+            return self._empty_hits(with_docs)
         return self.top_k_bool(q, k=k, with_docs=with_docs,
                                source=source)
 
@@ -1791,8 +1802,7 @@ class QueryEngine:
         rules = self._query_rules(source)
         toks = tokenize(query_text, rules)
         if not toks:
-            out = self.spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-            return self._attach_docs(out) if with_docs else out
+            return self._empty_hits(with_docs)
         *head, last = toks
         head_qtf: dict[str, float] = {}
         for t in head:
@@ -1811,8 +1821,7 @@ class QueryEngine:
         if exps:
             clauses.append({"terms": {t: 1.0 for t in exps}})
         if not clauses:
-            out = self.spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-            return self._attach_docs(out) if with_docs else out
+            return self._empty_hits(with_docs)
         return self.top_k_bool(
             Bool(should=tuple(clauses), minimum_should_match=1),
             k=k, with_docs=with_docs, source=source,
@@ -1880,14 +1889,12 @@ class QueryEngine:
                 )
         from sotohp_spark.index.build import FIELD_SEP
 
-        spark = self.spark
         toks = tokenize(query_text, self._query_rules(source))
         qtf: dict[str, int] = {}
         for t in toks:
             qtf[t] = qtf.get(t, 0) + 1
         if not qtf:
-            out = spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-            return self._attach_docs(out) if with_docs else out
+            return self._empty_hits(with_docs)
 
         field_avgdl: list = []
         keys: list = []
@@ -1913,8 +1920,7 @@ class QueryEngine:
             for key, d in dfs.items() if d
         }
         if not weights:
-            out = spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-            return self._attach_docs(out) if with_docs else out
+            return self._empty_hits(with_docs)
         combine = {"best_fields": "best", "most_fields": "sum",
                    "cross_fields": "cross"}.get(match_type)
         if combine is None:
@@ -1965,8 +1971,6 @@ class QueryEngine:
             and self._local_gate.acquire(blocking=False)
         ):
             try:
-                import numpy as np
-
                 if self._driver_shards is not None:
                     rows = [
                         s
@@ -1992,21 +1996,7 @@ class QueryEngine:
                     )
                     all_d.append(d)
                     all_s.append(s)
-                docs = (
-                    np.concatenate(all_d) if all_d
-                    else np.zeros(0, dtype=np.int64)
-                )
-                if docs.size == 0:
-                    out = spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-                    return self._attach_docs(out) if with_docs else out
-                scores = np.concatenate(all_s)
-                sel = np.lexsort((docs, -scores))[:k]
-                pdf = pd.DataFrame(
-                    {"doc_id": docs[sel].astype("int64"),
-                     "score": scores[sel]}
-                )
-                out = spark.createDataFrame(pdf, schema=TOPK_SCHEMA)
-                return self._attach_docs(out) if with_docs else out
+                return self._local_hits(all_d, all_s, k, with_docs)
             finally:
                 self._local_gate.release()
 
@@ -2328,12 +2318,13 @@ class QueryEngine:
                      doc_bounds=None, cursor=None,
                      excl_terms: frozenset = frozenset(),
                      min_match: int | None = None,
-                     bool_spec=None, terms_all=None):
+                     bool_spec=None, terms_all=None,
+                     with_docs: bool = False):
         """Interactive fast path: collect the pruned shard rows (their
         total posting count is known to be small from term_stats) and
         score per range on the driver — the SAME score_range code the
         distributed path runs, so results are identical by construction
-        (pytest-enforced).
+        (pytest-enforced).  Returns the final frame (_local_hits).
 
         ``terms_all``: the exact term set the caller's shard frame was
         pruned to.  With the driver-tier postings cache populated
@@ -2341,8 +2332,6 @@ class QueryEngine:
         memory — no Spark job at all; score_range re-applies the
         doc-bounds envelope, so skipping the DataFrame-level range
         pruning cannot change results (it only ever saved I/O)."""
-        import numpy as np
-
         if self._driver_shards is not None and terms_all is not None:
             rows = [
                 s
@@ -2370,15 +2359,82 @@ class QueryEngine:
             )
             all_docs.append(d)
             all_scores.append(s)
-        docs = np.concatenate(all_docs) if all_docs else np.zeros(0, dtype=np.int64)
+        return self._local_hits(all_docs, all_scores, k, with_docs)
+
+    def _local_hits(self, all_docs: list, all_scores: list, k: int,
+                    with_docs: bool) -> DataFrame:
+        """Shared tail of the driver-local legs: the global top-k of the
+        per-range (doc_id, score) arrays in (score desc, doc_id asc)
+        order, as ONE pandas createDataFrame.  ``with_docs`` takes the
+        metadata from the driver docs tier when it is on — an inner
+        join by searchsorted, so the warm pinned query runs no Spark
+        job — and through the Spark join of _attach_docs otherwise."""
+        import numpy as np
+
+        docs = np.concatenate(all_docs) if all_docs else np.zeros(0, np.int64)
         if docs.size == 0:
-            return self.spark.createDataFrame([], TOPK_SCHEMA).limit(0)
+            return self._empty_hits(with_docs)
         scores = np.concatenate(all_scores)
         sel = np.lexsort((docs, -scores))[:k]
-        pdf = pd.DataFrame(
-            {"doc_id": docs[sel].astype("int64"), "score": scores[sel]}
-        )
-        return self.spark.createDataFrame(pdf, schema=TOPK_SCHEMA)
+        docs, scores = docs[sel].astype("int64"), scores[sel]
+        meta = self._driver_docs_tier() if with_docs else None
+        if meta is None:
+            out = self.spark.createDataFrame(
+                pd.DataFrame({"doc_id": docs, "score": scores}),
+                schema=TOPK_SCHEMA,
+            )
+            return self._attach_docs(out) if with_docs else out
+        ids = meta["doc_id"].to_numpy()
+        pos = np.searchsorted(ids, docs)
+        found = pos < len(ids)
+        found[found] = ids[pos[found]] == docs[found]
+        if not found.any():
+            return self._empty_hits(True)
+        pdf = meta.iloc[pos[found]].reset_index(drop=True)
+        pdf.insert(2, "score", scores[found])
+        return self.spark.createDataFrame(pdf, schema=self._hits_schema())
+
+    def _driver_docs_tier(self) -> pd.DataFrame | None:
+        """The driver-tier docs metadata, or None while it is off.
+
+        Filled once per pin by the first with_docs query on the local
+        leg (callers hold _local_gate), so neither cache_postings nor a
+        refresh pays for it.  It is kept only if the collected frame's
+        memory fits what the shard rows left of
+        DRIVER_POSTINGS_CACHE_MAX_BYTES; the collect itself is bounded
+        because the tier is tried only when the shard rows fit.
+        doc_ts travels as epoch microseconds and is held UTC-aware, so
+        the frame round-trips it exactly under any session time zone."""
+        room, self._driver_docs_room = self._driver_docs_room, None
+        if room is not None:
+            pdf = self._docs.select(
+                "doc_id", "conv_id", F.unix_micros("doc_ts").alias("doc_ts"),
+                "n_turns", "doc_len",
+            ).toPandas()
+            if pdf.memory_usage(index=False, deep=True).sum() <= room:
+                pdf["doc_ts"] = pd.to_datetime(pdf["doc_ts"], unit="us",
+                                               utc=True)
+                self._driver_docs = pdf.sort_values(
+                    "doc_id", ignore_index=True
+                )
+        return self._driver_docs
+
+    def _hits_schema(self) -> T.StructType:
+        """The _attach_docs result schema: metadata fields as the docs
+        table types them, score as TOPK_SCHEMA does."""
+        if self._hits_struct is None:
+            fields = {f.name: f for f in self._docs.schema.fields}
+            fields["score"] = TOPK_SCHEMA["score"]
+            self._hits_struct = T.StructType(
+                [fields[c] for c in HITS_COLUMNS]
+            )
+        return self._hits_struct
+
+    def _empty_hits(self, with_docs: bool) -> DataFrame:
+        """A typed empty result — (doc_id, score), or the _attach_docs
+        schema with ``with_docs`` — without planning a join."""
+        schema = self._hits_schema() if with_docs else TOPK_SCHEMA
+        return self.spark.createDataFrame([], schema).limit(0)
 
     def _attach_docs(self, topk: DataFrame) -> DataFrame:
         """Join doc metadata onto a (tiny) top-k frame.
@@ -2393,7 +2449,7 @@ class QueryEngine:
         keyed = self._bucket_keyed(topk)
         return (
             self._docs.join(F.broadcast(keyed), ["range_bucket", "doc_id"])
-            .select("doc_id", "conv_id", "score", "doc_ts", "n_turns", "doc_len")
+            .select(*HITS_COLUMNS)
             .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         )
 
@@ -2787,8 +2843,7 @@ class QueryEngine:
         for t in toks:
             qtf[t] = qtf.get(t, 0) + 1
         if not qtf or max_edits < 1:
-            out = self.spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-            return self._attach_docs(out) if with_docs else out
+            return self._empty_hits(with_docs)
         cand = [
             (r["term"], int(r["df"]))
             for r in self._fuzzy_candidates_df(
@@ -2807,8 +2862,7 @@ class QueryEngine:
                         q * _bm25.lucene_idf_scalar(n, df)
                     )
         if not weights:
-            out = self.spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-            return self._attach_docs(out) if with_docs else out
+            return self._empty_hits(with_docs)
         return self.top_k(
             query_text, k=k, with_docs=with_docs, _weights=weights
         )
@@ -2969,8 +3023,7 @@ class QueryEngine:
             t: _bm25.lucene_idf_scalar(n, df) for t, df in cand
         }
         if not weights:
-            out = self.spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-            return self._attach_docs(out) if with_docs else out
+            return self._empty_hits(with_docs)
         return self.top_k(
             None, k=k, with_docs=with_docs, _weights=weights
         )
@@ -2997,8 +3050,7 @@ class QueryEngine:
             t: _bm25.lucene_idf_scalar(n, df) for t, df in cand
         }
         if not weights:
-            out = self.spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-            return self._attach_docs(out) if with_docs else out
+            return self._empty_hits(with_docs)
         return self.top_k(
             pattern, k=k, with_docs=with_docs, _weights=weights
         )

@@ -34,15 +34,5 @@ def tf_norm(
     return tf * (k1 + 1.0) / denom
 
 
-def tf_norm_upper_bound(
-    max_tf: float, min_dl: float, avgdl: float, k1: float = 1.2, b: float = 0.75
-) -> float:
-    """Monotone in tf (+) and dl (-): block ub uses the block's max
-    per-doc tf_norm directly; this helper documents the monotonicity
-    argument for the metadata builder."""
-    denom = max_tf + k1 * (1.0 - b + b * min_dl / avgdl)
-    return max_tf * (k1 + 1.0) / denom
-
-
 def lucene_idf_scalar(n_docs: int, df: int) -> float:
     return math.log1p((n_docs - df + 0.5) / (df + 0.5))

@@ -87,32 +87,3 @@ def delta_encode(sorted_ids: np.ndarray) -> np.ndarray:
 
 def delta_decode(deltas: np.ndarray) -> np.ndarray:
     return np.cumsum(np.asarray(deltas, dtype=np.uint64)).astype(np.int64)
-
-
-def encode_posting_payload(doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> bytes:
-    """Pack one posting run: varbyte(delta(doc_ids)) ++ varbyte(tfs) ++ varbyte(dls).
-
-    Sections are self-delimiting given the count (stored alongside in
-    the postings row), so no length headers are needed.
-    """
-    return (
-        varbyte_encode(delta_encode(doc_ids))
-        + varbyte_encode(np.asarray(tfs, dtype=np.uint64))
-        + varbyte_encode(np.asarray(dls, dtype=np.uint64))
-    )
-
-
-def decode_posting_payload(buf: bytes, count: int):
-    """Inverse of encode_posting_payload -> (doc_ids, tfs, dls)."""
-    b = np.frombuffer(buf, dtype=np.uint8)
-    term_idx = np.flatnonzero((b & 0x80) != 0)
-    if term_idx.size != 3 * count:
-        raise ValueError(
-            f"corrupt posting payload: {term_idx.size} values for count={count}"
-        )
-    end1 = int(term_idx[count - 1]) + 1 if count else 0
-    end2 = int(term_idx[2 * count - 1]) + 1 if count else 0
-    doc_ids = delta_decode(varbyte_decode(b[:end1].tobytes(), count))
-    tfs = varbyte_decode(b[end1:end2].tobytes(), count).astype(np.int64)
-    dls = varbyte_decode(b[end2:].tobytes(), count).astype(np.int64)
-    return doc_ids, tfs, dls

@@ -52,16 +52,6 @@ def deduped_turns_stream(
     return turns_stream.dropDuplicates(["conv_id", "turn_idx"])
 
 
-def session_windows_stream(turns_stream: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Native session windows (session_window) per conversation."""
-    src = turns_stream
-    if src.isStreaming:
-        src = src.withWatermark("ts", gap)
-    return src.groupBy(
-        F.session_window("ts", gap).alias("sess"), "conv_id"
-    ).agg(F.count("*").alias("n_turns"))
-
-
 def completed_conversations_stream(
     turns_stream: DataFrame,
     gap_minutes: int = 30,

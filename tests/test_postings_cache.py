@@ -16,7 +16,11 @@ tests pin
   phrase memory) — the round-5 ADVICE item;
 - the hot/cold union adds ZERO Spark jobs to a warm query on either
   scoring path (driver-local stays the pinned 1 job; distributed
-  stays at uncached parity — the union lives inside the same action).
+  stays at uncached parity — the union lives inside the same action);
+- the driver tiers of the default cache (shard rows, then docs
+  metadata within the same byte budget): identical rows and schema to
+  a budget-gated engine, zero Spark jobs for a warm ``with_docs``
+  top-k, and the budget and re-pin switching the docs tier off.
 
 Reference analog: Lucene/ES hot-segment + filter caching on the
 search tier the reference delegates to (ElasticOperations.scala).
@@ -24,11 +28,13 @@ search tier the reference delegates to (ElasticOperations.scala).
 
 import uuid
 
+import pandas as pd
 import pytest
 
 from sotohp_spark.config import EngineConfig
 from sotohp_spark.generator import generate_transcripts_pdf, reference_queries
 from sotohp_spark.index import IndexBuilder, QueryEngine
+from sotohp_spark.index.query import Bool
 
 
 def _jobs_during(spark, fn):
@@ -197,3 +203,167 @@ def test_driver_tier_budget_gate_and_identity(spark, built):
         b = cached.top_k_pdf(q, 10)
         assert list(a["doc_id"]) == list(b["doc_id"]), q
         assert list(a["score"]) == list(b["score"]), q
+
+
+CFG = EngineConfig(range_size=8, block_size=4, ranges_per_batch=2,
+                   shuffle_partitions=8)
+
+
+@pytest.fixture(scope="module")
+def churned(spark, tmp_path_factory):
+    """An index after one append and one delete: the docs table holds
+    rows past the build and tombstoned rows the scorer never returns."""
+    from sotohp_spark.streaming.incremental import (append_conversations,
+                                                    delete_conversations)
+
+    path = str(tmp_path_factory.mktemp("docs_tier_idx"))
+    pdf = generate_transcripts_pdf(0.05)
+    IndexBuilder(spark, path, CFG).build(
+        spark.createDataFrame(pdf), input_fingerprint="docs-tier"
+    )
+    new = generate_transcripts_pdf(0.01, seed=7)
+    new["conv_id"] = "app-" + new["conv_id"]
+    new["ts"] = new["ts"] + pd.Timedelta(days=120)
+    append_conversations(spark, path, spark.createDataFrame(new), CFG)
+    delete_conversations(
+        spark, path, list(pdf["conv_id"].drop_duplicates()[:3])
+    )
+    return path
+
+
+def _pinned(spark, path, budget=None):
+    eng = QueryEngine(spark, path)
+    eng.preload_term_stats()
+    if budget is not None:
+        eng.DRIVER_POSTINGS_CACHE_MAX_BYTES = budget
+    eng.cache_postings()
+    return eng
+
+
+def _same_hits(a, b, what):
+    assert a.schema == b.schema, what
+    assert a.collect() == b.collect(), what
+
+
+def test_driver_docs_tier_identity(spark, churned):
+    """Hits built on the driver from the docs tier equal the Spark docs
+    join row for row — all six columns, doc_ts included — with the
+    same schema, across every local-leg surface that attaches docs."""
+    gated = _pinned(spark, churned, budget=0)
+    assert gated._driver_shards is None
+    tiered = _pinned(spark, churned)
+    assert tiered._driver_shards is not None
+
+    calls = [
+        (q, lambda e, q=q, c=c: e.top_k(q, 10, c))
+        for q in reference_queries()["query_text"]
+        for c in (False, True)
+    ]
+    calls += [
+        ("bool", lambda e: e.top_k_bool(
+            Bool(must=["error"], should=["retry timeout"],
+                 must_not=["spark"]), 10)),
+        ("window", lambda e: e.top_k(
+            "error retry", 10, ts_min="2025-02-01", ts_max="2025-06-30")),
+        ("multi_match", lambda e: e.top_k_multi_match(
+            "error retry timeout", k=10)),
+    ]
+    for what, call in calls:
+        _same_hits(call(gated), call(tiered), what)
+    assert tiered._driver_docs is not None  # the tier served them
+
+    page = tiered.top_k("error retry", 5).collect()
+    cursor = (page[-1]["score"], page[-1]["doc_id"])
+    _same_hits(gated.top_k("error retry", 5, search_after=cursor),
+               tiered.top_k("error retry", 5, search_after=cursor),
+               "search_after")
+
+    # doc_ts keeps its instant when the session zone is not UTC
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        for q in ("error", "retry timeout", "tool call"):
+            _same_hits(gated.top_k(q, 10), tiered.top_k(q, 10), q)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+
+
+def test_driver_docs_tier_jobs_and_budget(spark, churned):
+    """A warm pinned with_docs top-k runs zero Spark jobs; the docs
+    tier fills lazily (never from cache_postings or a with_docs=False
+    query), stays off when the budget fits only the shard rows, and a
+    re-pin drops it."""
+    q = "error retry timeout"
+    tiered = _pinned(spark, churned)
+    tiered.top_k(q, 10, with_docs=False).collect()
+    assert tiered._driver_docs is None
+    want = tiered.top_k(q, 10)
+    assert tiered._driver_docs is not None
+    assert _jobs_during(spark, lambda: tiered.top_k(q, 10).collect()) == 0
+    # inner-join semantics: an id the docs table lacks is dropped
+    import numpy as np
+
+    top = want.collect()[0]
+    absent = int(tiered._driver_docs["doc_id"].max()) + 1
+    got = tiered._local_hits(
+        [np.array([absent, top["doc_id"]])], [np.array([9.0, top["score"]])],
+        10, True,
+    ).collect()
+    assert got == [top]
+
+    payload = sum(
+        len(r["payload"] or b"")
+        for rows in tiered._driver_shards.values() for r in rows
+    )
+    tight = _pinned(spark, churned, budget=payload)
+    assert tight._driver_shards is not None
+    _same_hits(tight.top_k(q, 10), want, "shard tier only")
+    assert tight._driver_docs is None
+    assert _jobs_during(spark, lambda: tight.top_k(q, 10).collect()) > 0
+
+    tiered.cache_postings()
+    assert tiered._driver_docs is None
+    _same_hits(tiered.top_k(q, 10), want, "re-pinned")
+    assert tiered._driver_docs is not None
+
+    unpinned = QueryEngine(spark, churned)
+    _same_hits(unpinned.top_k(q, 10), want, "unpinned")
+    assert unpinned._driver_docs is None
+
+
+def test_driver_docs_tier_concurrent_first_fill(spark, churned):
+    """Client threads racing on a freshly pinned engine: one holds the
+    local gate and fills the docs tier, the others take the
+    distributed path and its Spark join.  Every thread's rows must
+    equal the serial answer, and the tier must end filled once."""
+    import sys
+    import threading
+
+    queries = ["error retry", "tool call", "timeout", "search file"]
+    serial = _pinned(spark, churned)
+    want = {q: serial.top_k(q, 10).collect() for q in queries}
+    eng = _pinned(spark, churned)
+    got, errors = {}, []
+
+    def client(q):
+        try:
+            got[q] = eng.top_k(q, 10).collect()
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=client, args=(q,))
+                   for q in queries]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    assert got == want
+    assert eng._driver_docs is not None
+    assert eng._driver_docs_room is None
