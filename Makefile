@@ -2,7 +2,7 @@
 # reference Makefile:33-36 runs tests with search mocked — here the
 # oracle takes that role and needs nothing external).
 
-.PHONY: test test-fast selfcheck bench perfbench scaling package submit-smoke
+.PHONY: test test-fast test-query selfcheck bench perfbench scaling package submit-smoke
 
 # zip for spark-submit --py-files on a real cluster
 package:
@@ -26,6 +26,14 @@ test:
 test-fast:
 	python -m pytest tests/test_tokenizer.py tests/test_varbyte.py \
 	  tests/test_wand.py -q -k "not spark"
+
+# the suites that drive the per-range executor (QueryEngine.
+# _apply_per_range) on both legs, driver-local and distributed
+test-query:
+	python -m pytest tests/test_rank_identity.py tests/test_postings_cache.py \
+	  tests/test_query_paths.py tests/test_multifield.py \
+	  tests/test_bool_query.py tests/test_positional.py \
+	  tests/test_phrase_ranked.py tests/test_search_features.py -q
 
 selfcheck:
 	python scripts/selfcheck.py

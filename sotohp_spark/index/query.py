@@ -864,10 +864,11 @@ class QueryEngine:
                 "exclusive (conjunctive == min_should_match=n_terms "
                 "with AND absent-term semantics)"
             )
-        # reset per query: stats are populated by the driver-local
-        # path only; leaving the previous query's numbers in place
-        # would attribute them to a distributed/early-exit query
-        self.last_query_stats = {}
+        # reset per query: the kernel below fills the block-max pruning
+        # evidence (blocks_total / decoded / skipped) into this dict only
+        # when it runs on the driver — the distributed leg fills a pickled
+        # copy — so a distributed or early-exit query leaves it empty
+        self.last_query_stats = stats = {}
         doc_bounds = None
         if ts_min is not None or ts_max is not None:
             doc_bounds = self._doc_bounds_for_ts(ts_min, ts_max)
@@ -938,48 +939,21 @@ class QueryEngine:
 
         terms_all = sorted(set(terms) | excl_terms)
 
-        def _build_shards():
+        def shards():
             s = self._scoring_shards(terms_all)
             if doc_bounds is not None:
                 s = self._prune_shards_to_bounds(s, doc_bounds)
             return s
 
-        # the driver-local fast path needs the collected tombstone
-        # array; with a large (distributed-only) delete set it is
-        # skipped and scoring cogroups deletes per range instead.
-        # With the driver-tier postings cache populated the pruned
-        # shard FRAME is never needed at all (rows come from driver
-        # memory), so it is built lazily — a warm cached query spends
-        # zero py4j round-trips on plan construction.
-        if (
-            not _no_cut
-            and self._deletes is not None
-            and n_candidates <= self.LOCAL_PATH_MAX_POSTINGS
-            and self._local_gate.acquire(blocking=False)
-        ):
-            try:
-                use_driver = self._driver_shards is not None
-                return self._top_k_local(
-                    None if use_driver else _build_shards(),
-                    weights, k, avgdl, conjunctive, doc_bounds,
-                    cursor=search_after, excl_terms=excl_terms,
-                    min_match=min_match, bool_spec=_bool_spec,
-                    terms_all=terms_all, with_docs=with_docs,
-                )
-            finally:
-                self._local_gate.release()
-        shards = _build_shards()
+        prefilter = None
         if conjunctive:
             # ranges lacking any query term can't contribute
-            shards = self._prefilter_ranges(shards, n_terms, excl_terms)
-        if min_match is not None:
+            prefilter = (n_terms, excl_terms)
+        elif min_match is not None:
             # N-of-M analog: a range holding fewer than min_match
             # distinct POSITIVE terms cannot produce an eligible doc
-            shards = self._prefilter_ranges(
-                shards, min_match, excl_terms, exact=False
-            )
+            prefilter = (min_match, excl_terms, False)
 
-        bool_spec = _bool_spec
         # _no_cut (internal, query_string phrase composition): a
         # caller that refines membership AFTER scoring (positional
         # adjacency join) needs EVERY matched doc scored — k-cutting
@@ -988,8 +962,7 @@ class QueryEngine:
         # global order/limit; cost is the matched postings.
         k_range = None if _no_cut else k
 
-        def score_rows(pdf: pd.DataFrame, deletes) -> pd.DataFrame:
-            rows = pdf.to_dict("records")
+        def score_rows(rows: list, deletes) -> dict:
             if excl_terms:
                 rows, deletes = wand.split_excluded(
                     rows, excl_terms, deletes
@@ -997,18 +970,41 @@ class QueryEngine:
             docs, scores = wand.score_range(
                 rows, weights, k_range, avgdl, conjunctive=conjunctive,
                 cfg=cfg, deletes=deletes, doc_bounds=doc_bounds,
-                cursor=search_after, min_match=min_match,
-                bool_spec=bool_spec,
+                stats=stats, cursor=search_after, min_match=min_match,
+                bool_spec=_bool_spec,
             )
-            return pd.DataFrame({"doc_id": docs, "score": scores})
+            return {"doc_id": docs, "score": scores}
 
-        local = self._apply_per_range(
-            shards, score_rows, TOPK_SCHEMA, n_candidates=n_candidates
+        out = self._apply_per_range(
+            shards, score_rows, TOPK_SCHEMA, n_candidates=n_candidates,
+            terms=terms_all, prefilter=prefilter,
+            hits=None if _no_cut else (k, with_docs),
         )
-        if _no_cut:
-            return self._attach_docs(local) if with_docs else local
-        out = local.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
-        return self._attach_docs(out) if with_docs else out
+        return self._attach_docs(out) if _no_cut and with_docs else out
+
+    def _norm_fields(self, fields) -> list:
+        """[(name, boost)] for a field list of names or (name, boost)
+        pairs — the one normalizer behind top_k_bool, top_k_multi_match
+        and query_string.  "text" is the default stream; any other name
+        must be an indexed extra field, every boost > 0, and a field may
+        appear once (a repeat has no one obvious boost)."""
+        indexed = set(self.meta.get("fields") or ())
+        norm: list = []
+        for f in fields:
+            name, boost = (f, 1.0) if isinstance(f, str) else f
+            name, boost = str(name), float(boost)
+            if boost <= 0.0:
+                raise ValueError(f"field boost must be > 0: {f}")
+            if name != "text" and name not in indexed:
+                raise ValueError(
+                    f"field {name!r} is not indexed (index fields: "
+                    f"{sorted(indexed)}); build with "
+                    f"EngineConfig(extra_fields=...)"
+                )
+            if any(name == n for n, _ in norm):
+                raise ValueError(f"field {name!r} is listed twice")
+            norm.append((name, boost))
+        return norm
 
     def top_k_bool(self, q: Bool, k: int = 10, with_docs: bool = True,
                    source=None, search_after: tuple | None = None,
@@ -1072,25 +1068,8 @@ class QueryEngine:
         # scoping) overrides the query-level set for that clause only.
         from sotohp_spark.index.build import FIELD_SEP
 
-        indexed = set(self.meta.get("fields") or ())
-
-        def _norm_fields(fs):
-            norm = []
-            for f in fs:
-                name, fboost = (f, 1.0) if isinstance(f, str) else f
-                fboost = float(fboost)
-                if fboost <= 0.0:
-                    raise ValueError(f"field boost must be > 0: {f}")
-                if name != "text" and name not in indexed:
-                    raise ValueError(
-                        f"field {name!r} is not indexed (index "
-                        f"fields: {sorted(indexed)})"
-                    )
-                norm.append((str(name), fboost))
-            return norm
-
         norm_fields = (
-            [("text", 1.0)] if fields is None else _norm_fields(fields)
+            [("text", 1.0)] if fields is None else self._norm_fields(fields)
         )
         any_clause_fields = False
 
@@ -1109,7 +1088,7 @@ class QueryEngine:
                         qtf[t] = qtf.get(t, 0) + 1
                 cfs = norm_fields
                 if cfields is not None:
-                    cfs = _norm_fields(cfields)
+                    cfs = self._norm_fields(cfields)
                     any_clause_fields = True
                 keys: dict[str, float] = {}
                 for name, fboost in cfs:
@@ -1276,18 +1255,11 @@ class QueryEngine:
                     out.append(term)
             return out
 
+        field_names = (
+            [name for name, _ in self._norm_fields(fields)] if fields
+            else None
+        )
         indexed = set(self.meta.get("fields") or ())
-        field_names = None
-        if fields:
-            field_names = [
-                f if isinstance(f, str) else f[0] for f in fields
-            ]
-        for name in (field_names or []):
-            if name != "text" and name not in indexed:
-                raise ValueError(
-                    f"field {name!r} is not indexed (index "
-                    f"fields: {sorted(indexed)})"
-                )
         for it in items:
             if it.field is not None and it.field != "text" \
                     and it.field not in indexed:
@@ -1470,20 +1442,18 @@ class QueryEngine:
             {it.field for it in items
              if it.field not in (None, "text")
              and it.field not in indexed}
-            | {
-                (f if isinstance(f, str) else f[0])
-                for f in (fields or ())
-                if (f if isinstance(f, str) else f[0]) != "text"
-                and (f if isinstance(f, str) else f[0]) not in indexed
-            }
         )
-        if bad_fields:
-            return {
-                "valid": False,
-                "error": f"fields not indexed: {bad_fields} "
-                         f"(index fields: {sorted(indexed)})",
-                "items": [], "matchable": False,
-            }
+        error = (
+            f"fields not indexed: {bad_fields} (index fields: "
+            f"{sorted(indexed)})" if bad_fields else None
+        )
+        try:
+            self._norm_fields(fields or ())
+        except ValueError as e:
+            error = error or str(e)
+        if error:
+            return {"valid": False, "error": error, "items": [],
+                    "matchable": False}
 
         qf_names = [
             f if isinstance(f, str) else f[0] for f in (fields or ())
@@ -1868,25 +1838,32 @@ class QueryEngine:
         per doc; cost tracks the query terms' posting volume, the same
         contract as function_score).  Single-field queries never see
         any of this: their scan's IN-list contains no tagged keys."""
-        if not fields:
-            fields = ["text"]
-        norm: list = []
-        for f in fields:
-            if isinstance(f, str):
-                norm.append((f, 1.0))
-            else:
-                name, boost = f
-                if float(boost) <= 0.0:
-                    raise ValueError(f"field boost must be > 0: {f}")
-                norm.append((str(name), float(boost)))
-        indexed = set(self.meta.get("fields") or ())
-        for name, _ in norm:
-            if name != "text" and name not in indexed:
-                raise ValueError(
-                    f"field {name!r} is not indexed (index fields: "
-                    f"{sorted(indexed)}); build with "
-                    f"EngineConfig(extra_fields=...)"
-                )
+        norm = self._norm_fields(fields or ["text"])
+        combine = {"best_fields": "best", "most_fields": "sum",
+                   "cross_fields": "cross"}.get(match_type)
+        if combine is None:
+            raise ValueError(
+                f"match_type must be best_fields|most_fields|"
+                f"cross_fields, got {match_type!r}"
+            )
+        tie_breaker = float(tie_breaker)
+        if not 0.0 <= tie_breaker <= 1.0:
+            raise ValueError(
+                f"tie_breaker must be in [0, 1], got {tie_breaker}"
+            )
+        if tie_breaker and combine != "best":
+            raise ValueError("tie_breaker applies to best_fields only")
+        if combine == "sum":
+            # most_fields IS a weighted disjunction over the tagged
+            # keys (fields' scores ADD, membership = any key matched):
+            # one should clause over the fields compiles to the same
+            # weights and per-key avgdl and runs the BLOCK-MAX top_k.
+            # Only best/cross need the full-decode multi kernel (their
+            # cross-field max cannot be bounded per interval).
+            return self.top_k_bool(
+                Bool(should=[query_text]), k=k, with_docs=with_docs,
+                source=source, fields=norm,
+            )
         from sotohp_spark.index.build import FIELD_SEP
 
         toks = tokenize(query_text, self._query_rules(source))
@@ -1921,36 +1898,6 @@ class QueryEngine:
         }
         if not weights:
             return self._empty_hits(with_docs)
-        combine = {"best_fields": "best", "most_fields": "sum",
-                   "cross_fields": "cross"}.get(match_type)
-        if combine is None:
-            raise ValueError(
-                f"match_type must be best_fields|most_fields|"
-                f"cross_fields, got {match_type!r}"
-            )
-        tie_breaker = float(tie_breaker)
-        if not 0.0 <= tie_breaker <= 1.0:
-            raise ValueError(
-                f"tie_breaker must be in [0, 1], got {tie_breaker}"
-            )
-        if tie_breaker and combine != "best":
-            raise ValueError("tie_breaker applies to best_fields only")
-        if combine == "sum":
-            # most_fields IS a weighted disjunction over the tagged
-            # keys (fields' scores ADD, membership = any key matched),
-            # so it routes through the standard BLOCK-MAX top_k — full
-            # pruning, driver-local fast path, one job — with each key
-            # normalized by its field's own avgdl (wand.score_range's
-            # per-term dict form).  Only best/cross need the
-            # full-decode multi kernel (their cross-field max cannot
-            # be bounded per interval).
-            return self.top_k(
-                None, k=k, with_docs=with_docs,
-                _weights=weights,
-                _avgdl_by_term={
-                    key: field_avgdl[key_field[key]] for key in weights
-                },
-            )
         term_field = {key: key_field[key] for key in weights}
         term_tid = None
         if combine == "cross":
@@ -1963,57 +1910,21 @@ class QueryEngine:
                 for key in weights
             }
         cfg = self.cfg
-        n_candidates = sum(dfs[key] for key in weights)
+        terms = sorted(weights)
 
-        if (
-            self._deletes is not None
-            and n_candidates <= self.LOCAL_PATH_MAX_POSTINGS
-            and self._local_gate.acquire(blocking=False)
-        ):
-            try:
-                if self._driver_shards is not None:
-                    rows = [
-                        s
-                        for t in sorted(weights)
-                        for s in self._driver_shards.get(t, ())
-                    ]
-                else:
-                    rows = [
-                        r.asDict()
-                        for r in self._scoring_shards(
-                            sorted(weights)
-                        ).collect()
-                    ]
-                by_range: dict[int, list] = {}
-                for r in rows:
-                    by_range.setdefault(r["range_id"], []).append(r)
-                all_d, all_s = [], []
-                for rid in sorted(by_range):
-                    d, s = wand.score_range_multi(
-                        by_range[rid], weights, term_field, field_avgdl,
-                        k, cfg=cfg, deletes=self._deletes, combine=combine,
-                        term_tid=term_tid, tie_breaker=tie_breaker,
-                    )
-                    all_d.append(d)
-                    all_s.append(s)
-                return self._local_hits(all_d, all_s, k, with_docs)
-            finally:
-                self._local_gate.release()
-
-        def score_rows(pdf: pd.DataFrame, deletes) -> pd.DataFrame:
+        def score_rows(rows: list, deletes) -> dict:
             d, s = wand.score_range_multi(
-                pdf.to_dict("records"), weights, term_field, field_avgdl,
-                k, cfg=cfg, deletes=deletes, combine=combine,
-                term_tid=term_tid, tie_breaker=tie_breaker,
+                rows, weights, term_field, field_avgdl, k, cfg=cfg,
+                deletes=deletes, combine=combine, term_tid=term_tid,
+                tie_breaker=tie_breaker,
             )
-            return pd.DataFrame({"doc_id": d, "score": s})
+            return {"doc_id": d, "score": s}
 
-        shards = self._scoring_shards(sorted(weights))
-        local = self._apply_per_range(shards, score_rows, TOPK_SCHEMA)
-        out = local.orderBy(
-            F.col("score").desc(), F.col("doc_id").asc()
-        ).limit(k)
-        return self._attach_docs(out) if with_docs else out
+        return self._apply_per_range(
+            lambda: self._scoring_shards(terms), score_rows, TOPK_SCHEMA,
+            n_candidates=sum(dfs[key] for key in weights), terms=terms,
+            hits=(k, with_docs),
+        )
 
     def _bucket_keyed(self, ids: DataFrame) -> DataFrame:
         """Attach the derived range_bucket join key to a doc-id frame
@@ -2090,38 +2001,52 @@ class QueryEngine:
             self._pos_cache_bytes -= nb0
         return [r for t in terms for r in cache[t][1]]
 
-    def _apply_per_range(self, shards, score_rows, schema,
+    def _apply_per_range(self, shards, kernel, schema,
                          n_candidates: int | None = None,
-                         terms=None, pos_terms=None) -> DataFrame:
-        """Run a per-range scoring function over the candidate shards.
+                         terms=None, pos_terms=None, prefilter=None,
+                         hits: tuple | None = None) -> DataFrame:
+        """The one per-range executor: run ``kernel`` once per range_id
+        group of the candidate shard rows, on the driver or in Spark
+        tasks, and return the result frame.
 
-        ``shards`` may be a DataFrame or a zero-arg callable returning
-        one (lazy: the driver-cache path below never needs the frame,
-        so callers can avoid building the plan at all).
+        Kernel contract, rows in and columns out:
+        ``kernel(rows, deletes) -> {column: array}`` — ``rows`` is one
+        range's shard rows as a list of dicts, ``deletes`` the sorted
+        tombstones that apply to it, and the result holds equal-length
+        arrays under ``schema``'s column names.  The distributed leg
+        pickles the kernel, so it must not close over the engine.
 
-        ``n_candidates`` (r08): the caller's candidate-postings count
-        from the dictionary.  When provided, small enough for the
-        interactive gate, and the tombstones are driver-resident, the
-        SAME per-range kernel runs on the driver — over rows straight
-        from the driver-tier postings cache when ``terms`` names them
-        (ZERO Spark jobs; scoring projection only, so positional
-        kernels never take this leg), else over one collected frame
-        (one job) — instead of repartition + applyInPandas stages.
-        Identical results by construction: the identical
-        ``score_rows`` callable runs per range_id group with the
-        identical deletes array; only where it executes changes.  The
-        per-range prefilters some callers fold into the frame are pure
-        I/O pruning — every kernel re-checks its own term-coverage
-        requirement per range.  At scale (candidates above the gate,
-        or distributed-only tombstones) the distributed path below is
-        untouched.
+        Route, decided here and nowhere else: the driver-local leg runs
+        when ``n_candidates`` (the dictionary's candidate-postings
+        count) is given and at most LOCAL_PATH_MAX_POSTINGS, the
+        tombstones are driver-resident, and the serving gate is free
+        (a concurrent query routes distributed, never waits); otherwise
+        the distributed leg.  Both legs run the same kernel over the
+        same rows and deletes, so results are identical by
+        construction — only where it executes changes.
 
-        Small/no delete sets: plain groupBy(range_id).applyInPandas with
-        the collected tombstone array in the closure.  Large delete
-        sets: groupBy(range_id).cogroup(deletes-by-range) — each task
-        sees only ITS range's tombstones (per-range delete bitmap,
-        co-partitioned with the postings), so the deletes table never
-        touches the driver and never rides whole in a task closure.
+        Local leg: the rows are sourced once — the driver-tier shard
+        rows when ``terms`` names them (zero Spark jobs), else the
+        positional rows of ``pos_terms`` through the driver LRU, else
+        one collect() of ``shards()`` — and grouped by range_id in plain
+        Python; no pandas object is built before the result.
+
+        Distributed leg: the frame ``shards()`` returns (a zero-arg
+        callable, so the local leg never plans it), narrowed by
+        ``_prefilter_ranges(shards, *prefilter)`` when given — pure I/O
+        pruning, since every kernel re-checks its own term coverage
+        per range — feeds groupBy(range_id).applyInPandas with the
+        collected tombstones in the closure, or, when the deletes are
+        too many to collect, a cogroup with the deletes by range (each
+        task sees only ITS range's tombstones; the deletes table never
+        touches the driver).  One adapter turns each pandas group into
+        rows and the kernel's columns back into a frame.
+
+        Result: with ``hits=(k, with_docs)`` the global top-k in (score
+        desc, doc_id asc) order — _local_hits on the local leg (inside
+        the gate, which the docs-tier fill needs), orderBy/limit and
+        _attach_docs on the distributed leg; otherwise the unordered
+        kernel rows as one frame of ``schema``.
 
         The shards are repartitioned by range_id with an EXPLICIT
         partition count first: the shuffled payload is compressed
@@ -2134,6 +2059,8 @@ class QueryEngine:
         satisfies the groupBy's required distribution, so no second
         exchange appears.
         """
+        import numpy as np
+
         if (
             n_candidates is not None
             and self._deletes is not None
@@ -2147,37 +2074,37 @@ class QueryEngine:
                         for t in sorted(terms)
                         for s in self._driver_shards.get(t, ())
                     ]
-                    if not rows:
-                        return self.spark.createDataFrame(
-                            [], schema
-                        ).limit(0)
-                    pdf = pd.DataFrame(rows)
                 elif pos_terms is not None:
                     rows = self._positional_rows(sorted(pos_terms))
-                    if not rows:
-                        return self.spark.createDataFrame(
-                            [], schema
-                        ).limit(0)
-                    pdf = pd.DataFrame(rows)
                 else:
-                    sh = shards() if callable(shards) else shards
-                    pdf = sh.toPandas()
-                outs = []
-                for _rid, grp in pdf.groupby("range_id", sort=True):
-                    r = score_rows(grp, self._deletes)
-                    if len(r):
-                        outs.append(r)
-                if not outs:
+                    rows = [r.asDict() for r in shards().collect()]
+                by_range: dict[int, list] = {}
+                for r in rows:
+                    by_range.setdefault(r["range_id"], []).append(r)
+                parts = []
+                for rid in sorted(by_range):
+                    cols = kernel(by_range[rid], self._deletes)
+                    if len(next(iter(cols.values()))):
+                        parts.append(cols)
+                if hits is not None:
+                    return self._local_hits(
+                        [c["doc_id"] for c in parts],
+                        [c["score"] for c in parts], *hits,
+                    )
+                if not parts:
                     return self.spark.createDataFrame([], schema).limit(0)
-                res = (
-                    outs[0] if len(outs) == 1
-                    else pd.concat(outs, ignore_index=True)
+                return self.spark.createDataFrame(
+                    pd.DataFrame({
+                        name: np.concatenate([c[name] for c in parts])
+                        for name in parts[0]
+                    }),
+                    schema=schema,
                 )
-                return self.spark.createDataFrame(res, schema=schema)
             finally:
                 self._local_gate.release()
-        if callable(shards):
-            shards = shards()
+        shards = shards()
+        if prefilter is not None:
+            shards = self._prefilter_ranges(shards, *prefilter)
         try:
             n_part = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         except (TypeError, ValueError):
@@ -2185,31 +2112,43 @@ class QueryEngine:
             # back to the cluster's default parallelism
             n_part = self.spark.sparkContext.defaultParallelism
         shards = shards.repartition(n_part, "range_id")
+
+        def run(pdf: pd.DataFrame, deletes) -> pd.DataFrame:
+            return pd.DataFrame(kernel(pdf.to_dict("records"), deletes))
+
         if self._deletes is not None:
             deletes = self._deletes
+            out = shards.groupBy("range_id").applyInPandas(
+                lambda pdf: run(pdf, deletes), schema
+            )
+        else:
+            def fn(shard_pdf: pd.DataFrame,
+                   del_pdf: pd.DataFrame) -> pd.DataFrame:
+                return run(
+                    shard_pdf,
+                    np.unique(del_pdf["doc_id"].to_numpy(np.int64)),
+                )
 
-            def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-                return score_rows(pdf, deletes)
-
-            return shards.groupBy("range_id").applyInPandas(fn, schema)
-
-        import numpy as np
-
-        def fn2(shard_pdf: pd.DataFrame, del_pdf: pd.DataFrame) -> pd.DataFrame:
-            dels = np.unique(del_pdf["doc_id"].to_numpy(np.int64))
-            return score_rows(shard_pdf, dels)
-
-        # prune the tombstone table to the CANDIDATE ranges before the
-        # cogroup: without this, every query shuffles the full deletes
-        # table and spawns a task per delete-only range with no shards
-        dels = self._deletes_by_range().join(
-            shards.select("range_id").distinct(), "range_id", "left_semi"
-        )
-        return (
-            shards.groupBy("range_id")
-            .cogroup(dels.groupBy("range_id"))
-            .applyInPandas(fn2, schema)
-        )
+            # prune the tombstone table to the CANDIDATE ranges before
+            # the cogroup: without this, every query shuffles the full
+            # deletes table and spawns a task per delete-only range
+            # with no shards
+            dels = self._deletes_by_range().join(
+                shards.select("range_id").distinct(), "range_id",
+                "left_semi",
+            )
+            out = (
+                shards.groupBy("range_id")
+                .cogroup(dels.groupBy("range_id"))
+                .applyInPandas(fn, schema)
+            )
+        if hits is None:
+            return out
+        k, with_docs = hits
+        out = out.orderBy(
+            F.col("score").desc(), F.col("doc_id").asc()
+        ).limit(k)
+        return self._attach_docs(out) if with_docs else out
 
     def top_k_batch(
         self, queries: list, k_default: int = 10, conjunctive: bool = False
@@ -2252,8 +2191,6 @@ class QueryEngine:
         avgdl = self.meta["avgdl"]
         cfg = self.cfg
         conj = conjunctive
-        shards = self._scoring_shards(all_terms)
-
         # ship the (possibly 10^5-entry) query-weight table ONCE per
         # executor as a broadcast variable instead of pickling it into
         # every task closure — at eval-sweep scale the per-task
@@ -2268,12 +2205,11 @@ class QueryEngine:
         bc_queries = spark.sparkContext.broadcast(per_query)
         self._batch_bc = bc_queries
 
-        def score_rows(pdf: pd.DataFrame, deletes) -> pd.DataFrame:
-            rows = pdf.to_dict("records")
+        def score_rows(rows: list, deletes) -> dict:
             by_term: dict[str, list] = {}
             for r in rows:
                 by_term.setdefault(r["term"], []).append(r)
-            out = []
+            qids, docs, scores = [], [], []
             for qid, (weights, kk) in bc_queries.value.items():
                 qrows = [r for t in weights for r in by_term.get(t, ())]
                 if not qrows:
@@ -2282,22 +2218,18 @@ class QueryEngine:
                     qrows, weights, kk, avgdl, conjunctive=conj, cfg=cfg,
                     deletes=deletes,
                 )
-                if d.size:
-                    out.append(
-                        pd.DataFrame(
-                            {"query_id": qid, "doc_id": d, "score": s}
-                        )
-                    )
-            if not out:
-                return pd.DataFrame(
-                    {"query_id": pd.Series([], dtype=str),
-                     "doc_id": pd.Series([], dtype="int64"),
-                     "score": pd.Series([], dtype="float64")}
-                )
-            return pd.concat(out, ignore_index=True)
+                qids += [qid] * len(d)
+                docs.append(d)
+                scores.append(s)
+            return {
+                "query_id": qids,
+                "doc_id": np.concatenate(docs or [np.zeros(0, np.int64)]),
+                "score": np.concatenate(scores or [np.zeros(0)]),
+            }
 
         local = self._apply_per_range(
-            shards, score_rows, "query_id string, doc_id long, score double"
+            lambda: self._scoring_shards(all_terms), score_rows,
+            "query_id string, doc_id long, score double",
         )
         from pyspark.sql import Window
 
@@ -2314,58 +2246,11 @@ class QueryEngine:
             .select("query_id", "rank", "doc_id", "score")
         )
 
-    def _top_k_local(self, shards: DataFrame, weights, k, avgdl, conjunctive,
-                     doc_bounds=None, cursor=None,
-                     excl_terms: frozenset = frozenset(),
-                     min_match: int | None = None,
-                     bool_spec=None, terms_all=None,
-                     with_docs: bool = False):
-        """Interactive fast path: collect the pruned shard rows (their
-        total posting count is known to be small from term_stats) and
-        score per range on the driver — the SAME score_range code the
-        distributed path runs, so results are identical by construction
-        (pytest-enforced).  Returns the final frame (_local_hits).
-
-        ``terms_all``: the exact term set the caller's shard frame was
-        pruned to.  With the driver-tier postings cache populated
-        (cache_postings docstring), the rows come straight from driver
-        memory — no Spark job at all; score_range re-applies the
-        doc-bounds envelope, so skipping the DataFrame-level range
-        pruning cannot change results (it only ever saved I/O)."""
-        if self._driver_shards is not None and terms_all is not None:
-            rows = [
-                s
-                for t in terms_all
-                for s in self._driver_shards.get(t, ())
-            ]
-        else:
-            rows = [r.asDict() for r in shards.collect()]
-        by_range: dict[int, list] = {}
-        for r in rows:
-            by_range.setdefault(r["range_id"], []).append(r)
-        all_docs, all_scores = [], []
-        # block-max pruning evidence for the whole query, aggregated
-        # across ranges (blocks_total / blocks_decoded / blocks_skipped)
-        self.last_query_stats = stats = {}
-        for rid in sorted(by_range):
-            rrows, dels = by_range[rid], self._deletes
-            if excl_terms:
-                rrows, dels = wand.split_excluded(rrows, excl_terms, dels)
-            d, s = wand.score_range(
-                rrows, weights, k, avgdl, conjunctive=conjunctive,
-                cfg=self.cfg, deletes=dels, doc_bounds=doc_bounds,
-                stats=stats, cursor=cursor, min_match=min_match,
-                bool_spec=bool_spec,
-            )
-            all_docs.append(d)
-            all_scores.append(s)
-        return self._local_hits(all_docs, all_scores, k, with_docs)
-
     def _local_hits(self, all_docs: list, all_scores: list, k: int,
                     with_docs: bool) -> DataFrame:
-        """Shared tail of the driver-local legs: the global top-k of the
-        per-range (doc_id, score) arrays in (score desc, doc_id asc)
-        order, as ONE pandas createDataFrame.  ``with_docs`` takes the
+        """Top-k tail of _apply_per_range's local leg: the global top-k
+        of the per-range (doc_id, score) arrays in (score desc, doc_id
+        asc) order, as ONE pandas createDataFrame.  ``with_docs`` takes the
         metadata from the driver docs tier when it is on — an inner
         join by searchsorted, so the warm pinned query runs no Spark
         job — and through the Spark join of _attach_docs otherwise."""
@@ -3157,24 +3042,18 @@ class QueryEngine:
         avgdl = self.meta["avgdl"]
         cfg = self.cfg
         terms = sorted(weights)
-        n_terms = len(terms)
 
-        def shards():
-            s = self._scoring_shards(terms)
-            if conjunctive:
-                s = self._prefilter_ranges(s, n_terms)
-            return s
-
-        def score_rows(pdf: pd.DataFrame, deletes) -> pd.DataFrame:
+        def score_rows(rows: list, deletes) -> dict:
             docs, scores = wand.score_range(
-                pdf.to_dict("records"), weights, None, avgdl,
-                conjunctive=conjunctive, cfg=cfg, deletes=deletes,
+                rows, weights, None, avgdl, conjunctive=conjunctive,
+                cfg=cfg, deletes=deletes,
             )
-            return pd.DataFrame({"doc_id": docs, "score": scores})
+            return {"doc_id": docs, "score": scores}
 
         return self._apply_per_range(
-            shards, score_rows, TOPK_SCHEMA, n_candidates=n_candidates,
-            terms=terms,
+            lambda: self._scoring_shards(terms), score_rows, TOPK_SCHEMA,
+            n_candidates=n_candidates, terms=terms,
+            prefilter=(len(terms),) if conjunctive else None,
         )
 
     def top_k_collapse(self, query_text: str, k: int = 10,
@@ -4471,33 +4350,24 @@ class QueryEngine:
             return empty
         n_terms = len(terms)
 
-        def shards():
-            s = self._scoring_shards(terms)
-            if n_terms > 1:
-                # ranges lacking any query term can't contribute
-                s = self._prefilter_ranges(s, n_terms)
-            return s
-
-        def match_rows(pdf: pd.DataFrame, deletes) -> pd.DataFrame:
-            rows = pdf.to_dict("records")
+        def match_rows(rows: list, deletes) -> dict:
             # a term entirely absent from this range empties the
             # range's conjunction (conjunctive_match can only see the
             # terms that HAVE a shard here)
             if len({r["term"] for r in rows}) < n_terms:
-                base = {"doc_id": []}
-                if with_dl:
-                    base["dl"] = []
-                return pd.DataFrame(base).astype("int64")
+                return {"doc_id": [], "dl": []} if with_dl else {"doc_id": []}
             if with_dl:
                 # ``dl`` rides out of the rarest term's full decode —
                 # a doc_len-keyed aggregation needs NO docs join
                 ids, dls = conjunctive_match(rows, deletes, with_dl=True)
-                return pd.DataFrame({"doc_id": ids, "dl": dls})
-            return pd.DataFrame({"doc_id": conjunctive_match(rows, deletes)})
+                return {"doc_id": ids, "dl": dls}
+            return {"doc_id": conjunctive_match(rows, deletes)}
 
+        # ranges lacking any query term can't contribute
         return self._apply_per_range(
-            shards, match_rows, schema, n_candidates=sum(dfs.values()),
-            terms=terms,
+            lambda: self._scoring_shards(terms), match_rows, schema,
+            n_candidates=sum(dfs.values()), terms=terms,
+            prefilter=(n_terms,) if n_terms > 1 else None,
         )
 
     def matching_doc_ids_batch(self, queries, source=None) -> DataFrame:
@@ -4534,8 +4404,6 @@ class QueryEngine:
             term_df.update(dfs)
         if not phrase_terms:
             return self.spark.createDataFrame([], schema).limit(0)
-        shards = self._scoring_shards(all_terms)
-
         # ship the (possibly thousands-of-phrases) term table ONCE per
         # executor as a broadcast variable instead of pickling it into
         # every task closure — the same per-task serialization tax
@@ -4548,18 +4416,14 @@ class QueryEngine:
         bc_terms = self.spark.sparkContext.broadcast(phrase_terms)
         self._phrase_bc = bc_terms
 
-        def match_rows(pdf: pd.DataFrame, deletes) -> pd.DataFrame:
-            pairs = conjunctive_match_batch(
-                pdf.to_dict("records"), bc_terms.value, deletes
-            )
-            return pd.DataFrame(pairs, columns=["query_id", "doc_id"]).astype(
-                {"query_id": "str", "doc_id": "int64"}
-            )
+        def match_rows(rows: list, deletes) -> dict:
+            pairs = conjunctive_match_batch(rows, bc_terms.value, deletes)
+            return {"query_id": [q for q, _ in pairs],
+                    "doc_id": [d for _, d in pairs]}
 
         return self._apply_per_range(
-            shards, match_rows, schema,
-            n_candidates=sum(term_df.values()),
-            terms=sorted(all_terms),
+            lambda: self._scoring_shards(all_terms), match_rows, schema,
+            n_candidates=sum(term_df.values()), terms=sorted(all_terms),
         )
 
     def _phrase_offsets(self, phrase: str, source=None) -> list:
@@ -4611,25 +4475,18 @@ class QueryEngine:
         if any(dfs.get(t, 0) == 0 for t in terms):
             return empty
         n_terms = len(terms)
+
+        def match_rows(rows: list, deletes) -> dict:
+            if len({r["term"] for r in rows}) < n_terms:
+                return {"doc_id": []}
+            return {"doc_id": positional_phrase_match(rows, offs, deletes)}
+
         # FULL postings columns (pos_offsets/pos_payload included) —
         # the one query path that reads the positional stream
-        shards = self._postings.where(F.col("term").isin(terms))
-        if n_terms > 1:
-            shards = self._prefilter_ranges(shards, n_terms)
-
-        def match_rows(pdf: pd.DataFrame, deletes) -> pd.DataFrame:
-            rows = pdf.to_dict("records")
-            if len({r["term"] for r in rows}) < n_terms:
-                return pd.DataFrame({"doc_id": []}).astype(
-                    {"doc_id": "int64"}
-                )
-            return pd.DataFrame(
-                {"doc_id": positional_phrase_match(rows, offs, deletes)}
-            )
-
         return self._apply_per_range(
-            shards, match_rows, schema, n_candidates=sum(dfs.values()),
-            pos_terms=terms,
+            lambda: self._postings.where(F.col("term").isin(terms)),
+            match_rows, schema, n_candidates=sum(dfs.values()),
+            pos_terms=terms, prefilter=(n_terms,) if n_terms > 1 else None,
         )
 
     def span_near_doc_ids(self, query_text: str, slop: int = 0,
@@ -4685,25 +4542,18 @@ class QueryEngine:
         if any(dfs.get(t, 0) == 0 for t in terms):
             return empty
         n_terms = len(terms)
-        shards = self._postings.where(F.col("term").isin(terms))
-        if n_terms > 1:
-            shards = self._prefilter_ranges(shards, n_terms)
 
-        def match_rows(pdf: pd.DataFrame, deletes) -> pd.DataFrame:
-            rows = pdf.to_dict("records")
+        def match_rows(rows: list, deletes) -> dict:
             if len({r["term"] for r in rows}) < n_terms:
-                return pd.DataFrame({"doc_id": []}).astype(
-                    {"doc_id": "int64"}
-                )
-            return pd.DataFrame(
-                {"doc_id": span_near_match(
-                    rows, terms, slop, in_order, deletes
-                )}
-            )
+                return {"doc_id": []}
+            return {"doc_id": span_near_match(
+                rows, terms, slop, in_order, deletes
+            )}
 
         return self._apply_per_range(
-            shards, match_rows, schema, n_candidates=sum(dfs.values()),
-            pos_terms=terms,
+            lambda: self._postings.where(F.col("term").isin(terms)),
+            match_rows, schema, n_candidates=sum(dfs.values()),
+            pos_terms=terms, prefilter=(n_terms,) if n_terms > 1 else None,
         )
 
     def match_phrase_prefix_doc_ids(self, phrase: str,
@@ -4775,26 +4625,24 @@ class QueryEngine:
             term_df.update(dfs)
         if not offsets_map:
             return self.spark.createDataFrame([], schema).limit(0)
-        shards = self._postings.where(F.col("term").isin(sorted(all_terms)))
-
         prev = getattr(self, "_phrase_pos_bc", None)
         if prev is not None:
             prev.unpersist()
         bc_offs = self.spark.sparkContext.broadcast(offsets_map)
         self._phrase_pos_bc = bc_offs
 
-        def match_rows(pdf: pd.DataFrame, deletes) -> pd.DataFrame:
+        def match_rows(rows: list, deletes) -> dict:
             pairs = positional_phrase_match_batch(
-                pdf.to_dict("records"), bc_offs.value, deletes
+                rows, bc_offs.value, deletes
             )
-            return pd.DataFrame(pairs, columns=["query_id", "doc_id"]).astype(
-                {"query_id": "str", "doc_id": "int64"}
-            )
+            return {"query_id": [q for q, _ in pairs],
+                    "doc_id": [d for _, d in pairs]}
 
+        terms = sorted(all_terms)
         return self._apply_per_range(
-            shards, match_rows, schema,
-            n_candidates=sum(term_df.values()),
-            pos_terms=sorted(all_terms),
+            lambda: self._postings.where(F.col("term").isin(terms)),
+            match_rows, schema, n_candidates=sum(term_df.values()),
+            pos_terms=terms,
         )
 
     @staticmethod
@@ -5025,25 +4873,20 @@ class QueryEngine:
                 avgdl = self.meta["avgdl"]
                 cfg = self.cfg
                 n_terms = len(terms)
-                shards = self._postings.where(F.col("term").isin(terms))
-                if n_terms > 1:
-                    shards = self._prefilter_ranges(shards, n_terms)
 
-                def score_rows(pdf: pd.DataFrame, deletes) -> pd.DataFrame:
-                    rows = pdf.to_dict("records")
+                def score_rows(rows: list, deletes) -> dict:
                     if len({r["term"] for r in rows}) < n_terms:
-                        return pd.DataFrame(
-                            {"doc_id": [], "score": []}
-                        ).astype({"doc_id": "int64", "score": "float64"})
+                        return {"doc_id": [], "score": []}
                     docs, scores = phrase_match_scored(
                         rows, offs, weights, avgdl, cfg, deletes
                     )
-                    return pd.DataFrame({"doc_id": docs, "score": scores})
+                    return {"doc_id": docs, "score": scores}
 
                 scored = self._apply_per_range(
-                    shards, score_rows, schema,
-                    n_candidates=sum(dfs.values()),
+                    lambda: self._postings.where(F.col("term").isin(terms)),
+                    score_rows, schema, n_candidates=sum(dfs.values()),
                     pos_terms=terms,
+                    prefilter=(n_terms,) if n_terms > 1 else None,
                 )
         if texts is not None and offs:
             verified = texts.join(

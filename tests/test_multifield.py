@@ -279,6 +279,9 @@ def test_multi_match_errors(mf_setup):
         engine.top_k_multi_match("error", [("tool", 0.0)])
     with pytest.raises(ValueError):
         engine.top_k_multi_match("error", ["text"], match_type="zzz")
+    # a repeated field has no one obvious boost
+    with pytest.raises(ValueError, match="listed twice"):
+        engine.top_k_multi_match("error", ["tool", ("tool", 2.0)])
     # a plain index has no field postings: asking for one must raise
     with pytest.raises(ValueError):
         engine_p.top_k_multi_match("error", ["tool"])

@@ -148,12 +148,17 @@ def pos_index(spark, tmp_path_factory):
 def test_phrase_match_equals_brute_adjacency(spark, pos_index):
     path, texts = pos_index
     engine = QueryEngine(spark, path)
+    dist = QueryEngine(spark, path)
+    dist.LOCAL_PATH_MAX_POSTINGS = 0  # the distributed leg
     for phrase in ["error retry", "do it do", "error retry timeout",
                    "retry timeout", "zzz absent"]:
         got = sorted(
             r["doc_id"] for r in engine.phrase_match_doc_ids(phrase).collect()
         )
         assert got == _brute_phrase_docs(texts, phrase), phrase
+        assert got == sorted(
+            r["doc_id"] for r in dist.phrase_match_doc_ids(phrase).collect()
+        ), phrase
 
 
 def test_phrase_match_gap_and_camel_semantics(spark, pos_index):
@@ -489,6 +494,12 @@ def test_span_near_matches_brute(spark, span_index):
     assert 2 not in s0 and 2 in s1        # number gap costs one slop
     assert 1 not in s1 and 1 in u1        # wrong order needs unordered
     assert s0 <= s1 <= u1
+    # the distributed leg returns the same sets
+    dist = QueryEngine(spark, path)
+    dist.LOCAL_PATH_MAX_POSTINGS = 0
+    for want, kw in ((s0, {}), (u1, {"slop": 1, "in_order": False})):
+        got = dist.span_near_doc_ids("error retry", **kw).collect()
+        assert {r["doc_id"] for r in got} == want, kw
     # absent term -> empty; duplicate clauses and negative slop raise
     assert engine.span_near_doc_ids("error zzqabsent", slop=3).count() == 0
     with pytest.raises(ValueError):

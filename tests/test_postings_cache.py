@@ -367,3 +367,70 @@ def test_driver_docs_tier_concurrent_first_fill(spark, churned):
     assert got == want
     assert eng._driver_docs is not None
     assert eng._driver_docs_room is None
+
+
+def test_route_identity_across_legs(spark, churned):
+    """One executor, every leg: a pinned engine (driver-tier rows), a
+    budget-0 engine (one collect per query), a distributed-only engine
+    (LOCAL_PATH_MAX_POSTINGS = 0) and a cogroup engine (deletes kept
+    distributed) return the same schema and rows on every surface the
+    executor serves — sorted for the set surfaces.  ``churned`` has no
+    extra fields, so multi_match runs its three types over "text";
+    the field-tagged cases are covered in test_multifield."""
+    pinned = _pinned(spark, churned)
+    assert pinned._driver_shards is not None
+    collected = _pinned(spark, churned, budget=0)
+    assert collected._driver_shards is None
+    dist = QueryEngine(spark, churned)
+    dist.preload_term_stats()
+    dist.LOCAL_PATH_MAX_POSTINGS = 0
+    cogroup = QueryEngine(spark, churned, max_driver_deletes=0)
+    cogroup.preload_term_stats()
+    assert cogroup._deletes is None
+
+    q = "error retry timeout"
+    sets = {
+        "scored_matches": lambda e: e.scored_matches(q),
+        "scored_matches conjunctive": lambda e: e.scored_matches(
+            "error retry", conjunctive=True),
+        "matching_doc_ids": lambda e: e.matching_doc_ids("error retry"),
+        "matching_doc_ids with_dl": lambda e: e.matching_doc_ids(
+            "error retry", with_dl=True),
+        "bool _no_cut": lambda e: e.top_k_bool(
+            Bool(must=["error"], should=["retry timeout"]),
+            with_docs=False, _no_cut=True),
+    }
+    ranked = {
+        "conjunctive": lambda e: e.top_k("error retry", 10, True),
+        "must_not": lambda e: e.top_k(q, 10, must_not="spark"),
+        "min_should_match": lambda e: e.top_k(q, 10, min_should_match=2),
+    }
+    for mt in ("best_fields", "cross_fields", "most_fields"):
+        ranked[mt] = lambda e, mt=mt: e.top_k_multi_match(
+            q, ["text"], k=10, match_type=mt)
+    for what, call in {**sets, **ranked}.items():
+        want = call(pinned)
+        rows = want.collect()
+        assert rows, what
+        if what in sets:
+            rows = sorted(rows)
+        for eng in (collected, dist, cogroup):
+            got = call(eng)
+            assert got.schema == want.schema, what
+            got_rows = got.collect()
+            assert (sorted(got_rows) if what in sets else got_rows) \
+                == rows, what
+
+
+def test_pinned_no_cut_bool_runs_no_job(spark, churned):
+    """The _no_cut form of top_k_bool (query_string phrase
+    composition) takes the same local leg as top_k: on a pinned engine
+    a warm call reads the driver-tier rows and runs no Spark job."""
+    eng = _pinned(spark, churned)
+    q = Bool(must=["error", "retry"])
+
+    def run():
+        return eng.top_k_bool(q, with_docs=False, _no_cut=True).collect()
+
+    assert run()
+    assert _jobs_during(spark, run) == 0

@@ -32,6 +32,10 @@ def _jobs_during(spark, fn):
     return len(sc.statusTracker().getJobIdsForGroup(gid))
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_blockmax_skips_blocks_on_zipf_head(spark, tmp_path):
     """Every 64-doc range holds one high-tf doc: after its block is
     decoded, theta exceeds the remaining blocks' upper bounds and they
@@ -140,3 +144,19 @@ def test_local_gate_routes_concurrent_queries_distributed(spark, tmp_path):
     assert [(r["doc_id"], r["score"]) for r in out] == [
         (r["doc_id"], r["score"]) for r in local
     ]
+    # the other executor surfaces route the same way: with the gate
+    # held they run the distributed plan and return the free-gate rows
+    for call in (
+        lambda: engine.scored_matches("gamma beta"),
+        lambda: engine.top_k_multi_match("gamma beta", k=10,
+                                         with_docs=False),
+    ):
+        free = call()
+        assert "FlatMapGroupsInPandas" not in _plan(free)
+        assert engine._local_gate.acquire(blocking=False)
+        try:
+            held = call()
+        finally:
+            engine._local_gate.release()
+        assert "FlatMapGroupsInPandas" in _plan(held)
+        assert sorted(held.collect()) == sorted(free.collect())
