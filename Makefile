@@ -28,12 +28,15 @@ test-fast:
 	  tests/test_wand.py -q -k "not spark"
 
 # the suites that drive the per-range executor (QueryEngine.
-# _apply_per_range) on both legs, driver-local and distributed
+# _apply_per_range) on both legs, driver-local and distributed, and
+# the scored sets (top_k_bool(_no_cut=True), scored_matches) that the
+# query_string and aggregation surfaces run through it
 test-query:
 	python -m pytest tests/test_rank_identity.py tests/test_postings_cache.py \
 	  tests/test_query_paths.py tests/test_multifield.py \
 	  tests/test_bool_query.py tests/test_positional.py \
-	  tests/test_phrase_ranked.py tests/test_search_features.py -q
+	  tests/test_phrase_ranked.py tests/test_search_features.py \
+	  tests/test_query_string.py tests/test_aggregations.py -q
 
 selfcheck:
 	python scripts/selfcheck.py

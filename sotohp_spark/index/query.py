@@ -308,6 +308,9 @@ class QueryEngine:
         # scoring, which shares executors via FAIR pools.  Non-blocking
         # acquire = routing decision, never a wait.
         self._local_gate = threading.BoundedSemaphore(1)
+        # the latest ``shared`` table _apply_per_range broadcast (see
+        # there); None until a distributed batch call runs
+        self._shared_bc = None
         # selective serving cache (cache_postings): pinned hot frame +
         # driver-side hot term set; None until the caller opts in
         self._postings_hot: DataFrame | None = None
@@ -811,13 +814,14 @@ class QueryEngine:
         search_after: tuple | None = None,
         must_not: str | None = None,
         min_should_match: int | None = None,
-        _weights: dict | None = None,
-        _bool_spec=None,
-        _excl_terms: frozenset | None = None,
-        _avgdl_by_term: dict | None = None,
-        _no_cut: bool = False,
     ) -> DataFrame:
         """Top-k BM25. Returns DataFrame(doc_id, score[, conv_id...]).
+
+        Every knob compiles onto a ``Bool`` (_match_bool) that
+        top_k_bool runs — the way Lucene rewrites ``operator=and``,
+        ``minimum_should_match`` and ``must_not`` into one
+        BooleanQuery — so the shape rule there picks the per-range
+        kernel (block-max disjunction, conjunction or N-of-M count).
 
         ``source`` selects the per-source rules chain for query
         tokenization when the engine holds a KeywordRulesRouter.
@@ -835,6 +839,11 @@ class QueryEngine:
         over cursor-eligible docs (operators/wand.score_range).  Page
         boundaries compare float64-exact — always feed back a score
         the engine itself returned, not a rounded display value.
+
+        ``conjunctive``: every distinct query term is required (one
+        single-term must clause each); a term absent from the corpus
+        empties the result (reference AND semantics, mediaSearch,
+        MediaServiceLive.scala:108-112).
 
         ``must_not``: text whose terms EXCLUDE matching docs (the ES
         bool-query must_not clause; Lucene MUST_NOT semantics: a doc
@@ -864,123 +873,46 @@ class QueryEngine:
                 "exclusive (conjunctive == min_should_match=n_terms "
                 "with AND absent-term semantics)"
             )
-        # reset per query: the kernel below fills the block-max pruning
-        # evidence (blocks_total / decoded / skipped) into this dict only
-        # when it runs on the driver — the distributed leg fills a pickled
-        # copy — so a distributed or early-exit query leaves it empty
-        self.last_query_stats = stats = {}
-        doc_bounds = None
-        if ts_min is not None or ts_max is not None:
-            doc_bounds = self._doc_bounds_for_ts(ts_min, ts_max)
-            if doc_bounds is None:
-                return self._empty_hits(with_docs)
-        if _weights is not None:
-            # internal: caller supplies ready (term -> weight) pairs of
-            # KNOWN corpus terms (more_like_this) — no re-tokenization,
-            # so analyzed terms can never skew through the query chain
-            weights = dict(_weights)
-            n_candidates = sum(
-                self._term_dfs(sorted(weights)).values()
-            )
-        else:
-            weights, n_candidates = self.query_weights(query_text, source)
-        if conjunctive and len(weights) < len(
-            set(tokenize(query_text, self._query_rules(source)))
-        ):
-            # reference AND semantics (mediaSearch, MediaServiceLive.scala:
-            # 108-112): a query term absent from the corpus empties the result
-            weights = {}
-        if not weights:
+        q = self._match_bool(
+            query_text, conjunctive, source, must_not=must_not,
+            min_should_match=min_should_match, ts_min=ts_min, ts_max=ts_max,
+        )
+        if q is None:
+            self.last_query_stats = {}
             return self._empty_hits(with_docs)
-
-        # internal (top_k_multi_match most_fields): per-term avgdl
-        # for field-tagged keys — the kernel normalizes each key
-        # with its field's own collection avgdl (wand.score_range's
-        # dict form)
-        avgdl = (
-            _avgdl_by_term if _avgdl_by_term is not None
-            else self.meta["avgdl"]
+        return self.top_k_bool(
+            q, k=k, with_docs=with_docs, source=source,
+            search_after=search_after,
         )
-        cfg = self.cfg
-        terms = sorted(weights)
-        n_terms = len(terms)
 
-        min_match = None
-        if min_should_match is not None:
-            min_match = int(min_should_match)
-            if min_match > n_terms:
-                # fewer present terms than required matches: provably
-                # empty (a clause on an absent term matches no doc)
-                return self._empty_hits(with_docs)
-            if min_match <= 1:
-                min_match = None  # plain disjunction
-
-        excl_terms: frozenset = frozenset()
-        if _excl_terms:
-            # internal (top_k_bool): pre-analyzed excluded terms, all
-            # known present in the corpus
-            excl_terms = frozenset(_excl_terms)
-            n_candidates += sum(
-                self._term_dfs(sorted(excl_terms)).values()
-            )
-        if must_not:
-            cand = sorted(
-                set(tokenize(must_not, self._query_rules(source)))
-            )
-            excl_dfs = self._term_dfs(cand)
-            excl_terms = frozenset(t for t in cand if excl_dfs.get(t))
-            if conjunctive and excl_terms & set(terms):
-                # must + must_not on the same term: every doc matching
-                # all positives contains it, hence is excluded
-                return self._empty_hits(with_docs)
-            # excluded postings are collected/decoded too — they count
-            # against the driver-local gate like candidate postings
-            n_candidates += sum(excl_dfs[t] for t in excl_terms)
-
-        terms_all = sorted(set(terms) | excl_terms)
-
-        def shards():
-            s = self._scoring_shards(terms_all)
-            if doc_bounds is not None:
-                s = self._prune_shards_to_bounds(s, doc_bounds)
-            return s
-
-        prefilter = None
+    def _match_bool(self, query_text: str, conjunctive: bool = False,
+                    source=None, must_not: str | None = None,
+                    min_should_match: int | None = None,
+                    ts_min=None, ts_max=None) -> "Bool | None":
+        """The ``Bool`` a match query compiles to, with the text
+        analyzed once into pre-analyzed ``terms`` clauses: plain text
+        is one should clause; ``conjunctive`` one single-term must
+        clause per distinct term; ``min_should_match`` one single-term
+        should clause per distinct term under that minimum.  None when
+        analysis leaves no term."""
+        qtf: dict[str, int] = {}
+        for t in tokenize(query_text, self._query_rules(source)):
+            qtf[t] = qtf.get(t, 0) + 1
+        if not qtf:
+            return None
+        per_term = tuple({"terms": {t: c}} for t, c in qtf.items())
         if conjunctive:
-            # ranges lacking any query term can't contribute
-            prefilter = (n_terms, excl_terms)
-        elif min_match is not None:
-            # N-of-M analog: a range holding fewer than min_match
-            # distinct POSITIVE terms cannot produce an eligible doc
-            prefilter = (min_match, excl_terms, False)
-
-        # _no_cut (internal, query_string phrase composition): a
-        # caller that refines membership AFTER scoring (positional
-        # adjacency join) needs EVERY matched doc scored — k-cutting
-        # first could let a later-rejected doc evict a true match.
-        # Same contract as scored_matches: per-range k disabled, no
-        # global order/limit; cost is the matched postings.
-        k_range = None if _no_cut else k
-
-        def score_rows(rows: list, deletes) -> dict:
-            if excl_terms:
-                rows, deletes = wand.split_excluded(
-                    rows, excl_terms, deletes
-                )
-            docs, scores = wand.score_range(
-                rows, weights, k_range, avgdl, conjunctive=conjunctive,
-                cfg=cfg, deletes=deletes, doc_bounds=doc_bounds,
-                stats=stats, cursor=search_after, min_match=min_match,
-                bool_spec=_bool_spec,
-            )
-            return {"doc_id": docs, "score": scores}
-
-        out = self._apply_per_range(
-            shards, score_rows, TOPK_SCHEMA, n_candidates=n_candidates,
-            terms=terms_all, prefilter=prefilter,
-            hits=None if _no_cut else (k, with_docs),
+            must, should = per_term, ()
+        elif min_should_match is not None:
+            must, should = (), per_term
+        else:
+            must, should = (), ({"terms": qtf},)
+        return Bool(
+            must=must, should=should,
+            must_not=(must_not,) if must_not else (),
+            ts_min=ts_min, ts_max=ts_max,
+            minimum_should_match=min_should_match,
         )
-        return self._attach_docs(out) if _no_cut and with_docs else out
 
     def _norm_fields(self, fields) -> list:
         """[(name, boost)] for a field list of names or (name, boost)
@@ -1011,19 +943,34 @@ class QueryEngine:
                    fields=None, _no_cut: bool = False) -> DataFrame:
         """Top-k BM25 for a composable ES ``bool`` query (see Bool) —
         must + should + must_not + filter + minimum_should_match +
-        per-clause boosts in ONE object, compiled onto the single-job
-        top_k machinery.
+        per-clause boosts in ONE object.  The one BM25 scoring compile:
+        top_k, scored_matches and the expansion surfaces (fuzzy,
+        wildcard, regexp, more_like_this) all compile onto a Bool and
+        run here.
 
         Compilation: every clause's analyzed terms pre-merge into one
         (term -> sum of qtf * idf * boost) weight map on the driver
-        (a boosted weight is just scaled idf — same contract as
-        wildcard's expanded weights), and clause MEMBERSHIP compiles
-        to a wand.BoolSpec: one bit per clause group, each term
-        carrying the OR of its groups' bits, evaluated per doc inside
-        the per-range scorer.  Block-max pruning stays valid (the
-        min_match argument — see BoolSpec).  Scale shape is top_k's:
-        one pruned term-IN shard scan, one job warm, driver-local fast
-        path when the candidate volume is tiny.
+        (a boosted weight is just scaled idf — a pre-analyzed
+        ``terms`` clause of expansions gets each its own idf), and the
+        clause SHAPE picks the per-range kernel:
+
+          * every group a single distinct-term required (must/filter)
+            group, no should group -> the conjunctive kernel
+            (intersection, ranges lacking a term prefiltered away);
+          * no required group, every should group a single distinct
+            term, minimum_should_match > 1 -> the N-of-M count kernel
+            (wand.score_range min_match);
+          * one required group covering every scoring term, or should
+            groups under minimum_should_match <= 1 -> plain block-max
+            disjunction;
+          * anything else -> a wand.BoolSpec: one bit per clause group
+            (at most 62), each term carrying the OR of its groups'
+            bits, evaluated per doc inside the per-range scorer.
+
+        Block-max pruning stays valid in every mode (the min_match
+        argument — see BoolSpec).  Scale shape: one pruned term-IN
+        shard scan, one job warm, driver-local fast path when the
+        candidate volume is tiny (_apply_per_range).
 
         ES parity notes: minimum_should_match defaults to 1 with no
         must clauses and 0 otherwise; a must clause none of whose
@@ -1045,6 +992,11 @@ class QueryEngine:
         group-bitmask machinery runs unchanged over keys — still ONE
         pruned block-max job (wand.score_range's per-term-avgdl
         form).  None (default) = the plain text stream."""
+        # reset per query: the kernel below fills the block-max pruning
+        # evidence (blocks_total / decoded / skipped) into this dict only
+        # when it runs on the driver — the distributed leg fills a pickled
+        # copy — so a distributed or early-exit query leaves it empty
+        self.last_query_stats = stats = {}
         must = _bool_clauses(q.must)
         should = _bool_clauses(q.should)
         must_not = _bool_clauses(q.must_not)
@@ -1149,15 +1101,36 @@ class QueryEngine:
                     c * boost * bm25.lucene_idf_scalar(n, dfs[t])
                 )
 
-        # membership spec, only when plain disjunction can't express it
-        # (a scored doc always matched >= 1 term, so ONE must group
+        excl: set = set()
+        for qtf, _boost in _analyze(must_not):
+            excl.update(qtf)
+        excl_dfs = self._term_dfs(sorted(excl)) if excl else {}
+        excl_terms = frozenset(t for t in excl if excl_dfs.get(t))
+        if any(g.keys() <= excl_terms for g, _ in must_groups):
+            # every doc matching this required group contains an
+            # excluded term
+            return self._empty_hits(with_docs)
+
+        def single_terms(groups) -> bool:
+            ts = [t for g, _ in groups for t in g]
+            return len(ts) == len(groups) == len(set(ts))
+
+        # kernel mode by clause shape (see the docstring)
+        conjunctive = (
+            len(must_groups) >= 2 and not should_groups
+            and single_terms(must_groups)
+        )
+        min_match = (
+            msm if not must_groups and msm > 1
+            and single_terms(should_groups) else None
+        )
+        # membership spec, only when no kernel mode expresses it (a
+        # scored doc always matched >= 1 term, so ONE must group
         # covering every scoring term — or no must and msm <= 1 over
-        # one should group — needs no per-doc group test)
+        # should groups — needs no per-doc group test)
         spec = None
-        n_groups = len(must_groups) + (len(should_groups) if msm > 0 else 0)
-        must_terms = set().union(*(g.keys() for g, _ in must_groups)) \
-            if must_groups else set()
-        needs_spec = (
+        must_terms = set().union(*(g.keys() for g, _ in must_groups))
+        needs_spec = not conjunctive and min_match is None and (
             len(must_groups) >= 2
             or (len(must_groups) == 1
                 and any(t not in must_terms for t in weights))
@@ -1165,6 +1138,9 @@ class QueryEngine:
             or msm > 1
         )
         if needs_spec:
+            n_groups = len(must_groups) + (
+                len(should_groups) if msm > 0 else 0
+            )
             if n_groups > 62:
                 raise ValueError(
                     f"too many bool clause groups ({n_groups} > 62)"
@@ -1191,13 +1167,10 @@ class QueryEngine:
                 min_should=msm if msm > 0 else 0,
             )
 
-        excl: set = set()
-        for qtf, _boost in _analyze(must_not):
-            excl.update(qtf)
-        excl_dfs = self._term_dfs(sorted(excl)) if excl else {}
-        excl_terms = frozenset(t for t in excl if excl_dfs.get(t))
-
-        avgdl_by_term = None
+        # per-term avgdl for field-tagged keys: the kernel normalizes
+        # each key with its field's own collection avgdl (wand.
+        # score_range's dict form)
+        avgdl = self.meta["avgdl"]
         if fields is not None or any_clause_fields:
             field_avgdl = self.meta.get("field_avgdl") or {}
 
@@ -1211,17 +1184,63 @@ class QueryEngine:
                     else float(field_avgdl.get(name, 0.0))
                 )
 
-            avgdl_by_term = {key: _avgdl(key) for key in weights}
+            avgdl = {key: _avgdl(key) for key in weights}
 
-        return self.top_k(
-            None, k=k, with_docs=with_docs,
-            ts_min=q.ts_min, ts_max=q.ts_max,
-            search_after=search_after,
-            _weights=weights, _bool_spec=spec,
-            _excl_terms=excl_terms,
-            _avgdl_by_term=avgdl_by_term,
-            _no_cut=_no_cut,
+        doc_bounds = None
+        if q.ts_min is not None or q.ts_max is not None:
+            doc_bounds = self._doc_bounds_for_ts(q.ts_min, q.ts_max)
+            if doc_bounds is None:
+                return self._empty_hits(with_docs)
+
+        cfg = self.cfg
+        terms_all = sorted(set(weights) | excl_terms)
+        # excluded postings are collected/decoded too — they count
+        # against the driver-local gate like candidate postings
+        n_candidates = sum(dfs[t] for t in weights) + sum(
+            excl_dfs[t] for t in excl_terms
         )
+
+        def shards():
+            s = self._scoring_shards(terms_all)
+            if doc_bounds is not None:
+                s = self._prune_shards_to_bounds(s, doc_bounds)
+            return s
+
+        prefilter = None
+        if conjunctive:
+            # ranges lacking any required term can't contribute
+            prefilter = (len(weights), excl_terms)
+        elif min_match is not None:
+            # a range holding fewer than min_match distinct POSITIVE
+            # terms cannot produce an eligible doc
+            prefilter = (min_match, excl_terms, False)
+
+        # _no_cut (internal: scored_matches, aggregations, query_string
+        # phrase composition): a caller that consumes or refines the
+        # membership AFTER scoring needs EVERY matched doc scored —
+        # per-range k disabled, no global order/limit; cost is the
+        # matched postings.
+        k_range = None if _no_cut else k
+
+        def score_rows(rows: list, deletes) -> dict:
+            if excl_terms:
+                rows, deletes = wand.split_excluded(
+                    rows, excl_terms, deletes
+                )
+            docs, scores = wand.score_range(
+                rows, weights, k_range, avgdl, conjunctive=conjunctive,
+                cfg=cfg, deletes=deletes, doc_bounds=doc_bounds,
+                stats=stats, cursor=search_after, min_match=min_match,
+                bool_spec=spec,
+            )
+            return {"doc_id": docs, "score": scores}
+
+        out = self._apply_per_range(
+            shards, score_rows, TOPK_SCHEMA, n_candidates=n_candidates,
+            terms=terms_all, prefilter=prefilter,
+            hits=None if _no_cut else (k, with_docs),
+        )
+        return self._attach_docs(out) if _no_cut and with_docs else out
 
     def _compile_qs_items(self, items, fields, max_expansions,
                           source, texts_given: bool):
@@ -2004,7 +2023,8 @@ class QueryEngine:
     def _apply_per_range(self, shards, kernel, schema,
                          n_candidates: int | None = None,
                          terms=None, pos_terms=None, prefilter=None,
-                         hits: tuple | None = None) -> DataFrame:
+                         hits: tuple | None = None,
+                         shared=None) -> DataFrame:
         """The one per-range executor: run ``kernel`` once per range_id
         group of the candidate shard rows, on the driver or in Spark
         tasks, and return the result frame.
@@ -2015,6 +2035,15 @@ class QueryEngine:
         tombstones that apply to it, and the result holds equal-length
         arrays under ``schema``'s column names.  The distributed leg
         pickles the kernel, so it must not close over the engine.
+
+        ``shared``: a read-only table every kernel call reads (a batch's
+        per-query terms or weights), passed as the kernel's third
+        argument.  The local leg hands it over as is; the distributed
+        leg ships it ONCE per executor as a broadcast variable instead
+        of pickling it into every task closure.  The engine keeps one
+        such broadcast: the previous one is unpersisted, never
+        destroyed, because a still-unexecuted frame holding it may
+        re-broadcast lazily.
 
         Route, decided here and nowhere else: the driver-local leg runs
         when ``n_candidates`` (the dictionary's candidate-postings
@@ -2082,8 +2111,9 @@ class QueryEngine:
                 for r in rows:
                     by_range.setdefault(r["range_id"], []).append(r)
                 parts = []
+                extra = () if shared is None else (shared,)
                 for rid in sorted(by_range):
-                    cols = kernel(by_range[rid], self._deletes)
+                    cols = kernel(by_range[rid], self._deletes, *extra)
                     if len(next(iter(cols.values()))):
                         parts.append(cols)
                 if hits is not None:
@@ -2112,9 +2142,18 @@ class QueryEngine:
             # back to the cluster's default parallelism
             n_part = self.spark.sparkContext.defaultParallelism
         shards = shards.repartition(n_part, "range_id")
+        bc = None
+        if shared is not None:
+            prev = self._shared_bc
+            if prev is not None:
+                prev.unpersist()
+            bc = self._shared_bc = self.spark.sparkContext.broadcast(shared)
 
         def run(pdf: pd.DataFrame, deletes) -> pd.DataFrame:
-            return pd.DataFrame(kernel(pdf.to_dict("records"), deletes))
+            extra = () if bc is None else (bc.value,)
+            return pd.DataFrame(
+                kernel(pdf.to_dict("records"), deletes, *extra)
+            )
 
         if self._deletes is not None:
             deletes = self._deletes
@@ -2191,26 +2230,13 @@ class QueryEngine:
         avgdl = self.meta["avgdl"]
         cfg = self.cfg
         conj = conjunctive
-        # ship the (possibly 10^5-entry) query-weight table ONCE per
-        # executor as a broadcast variable instead of pickling it into
-        # every task closure — at eval-sweep scale the per-task
-        # serialization tax is real.  The PREVIOUS batch's broadcast is
-        # unpersisted here (not destroyed: a still-unexecuted DataFrame
-        # holding it can lazily re-broadcast), bounding a long eval
-        # session to one outstanding weight table instead of leaking
-        # one per call.
-        prev = getattr(self, "_batch_bc", None)
-        if prev is not None:
-            prev.unpersist()
-        bc_queries = spark.sparkContext.broadcast(per_query)
-        self._batch_bc = bc_queries
 
-        def score_rows(rows: list, deletes) -> dict:
+        def score_rows(rows: list, deletes, queries: dict) -> dict:
             by_term: dict[str, list] = {}
             for r in rows:
                 by_term.setdefault(r["term"], []).append(r)
             qids, docs, scores = [], [], []
-            for qid, (weights, kk) in bc_queries.value.items():
+            for qid, (weights, kk) in queries.items():
                 qrows = [r for t in weights for r in by_term.get(t, ())]
                 if not qrows:
                     continue
@@ -2227,9 +2253,13 @@ class QueryEngine:
                 "score": np.concatenate(scores or [np.zeros(0)]),
             }
 
+        # the (possibly 10^5-entry) query-weight table rides as the
+        # shared broadcast: at eval-sweep scale the per-task
+        # serialization tax is real
         local = self._apply_per_range(
             lambda: self._scoring_shards(all_terms), score_rows,
             "query_id string, doc_id long, score double",
+            shared=per_query,
         )
         from pyspark.sql import Window
 
@@ -2717,12 +2747,11 @@ class QueryEngine:
         length-band + Levenshtein refinement post-scan in codegen;
         matches are attributed back to their source terms on the
         driver over the tiny collected candidate list.
-        The expanded weight table then feeds the standard top_k
-        machinery (_weights), so block-max pruning, the driver-local
-        gate, deletes, and pagination all apply unchanged — warm cost
-        is 1 dictionary job + the usual scoring job."""
-        from sotohp_spark.operators import bm25 as _bm25
-
+        Each source term's expansions become one pre-analyzed
+        ``terms`` should clause of top_k_bool, which applies the idf,
+        so block-max pruning, the driver-local gate, deletes, and
+        pagination all apply unchanged — warm cost is 1 dictionary job
+        + the usual scoring job."""
         toks = tokenize(query_text, self._query_rules(source))
         qtf: dict[str, int] = {}
         for t in toks:
@@ -2735,22 +2764,21 @@ class QueryEngine:
                 sorted(qtf), max_edits, prefix_length
             ).collect()
         ]
-        n = self.meta["n_docs"]
-        weights: dict[str, float] = {}
+        # clauses in sorted source-term order: an expansion shared by
+        # two source terms sums its weights in that order
+        clauses = []
         for t, q in sorted(qtf.items()):
             pfx = t[:prefix_length] if prefix_length > 0 else ""
-            for t2, df in cand:
-                if not t2.startswith(pfx):
-                    continue
-                if _edit_distance(t, t2, max_edits) <= max_edits:
-                    weights[t2] = weights.get(t2, 0.0) + (
-                        q * _bm25.lucene_idf_scalar(n, df)
-                    )
-        if not weights:
+            exps = {
+                t2: q for t2, _df in cand
+                if t2.startswith(pfx)
+                and _edit_distance(t, t2, max_edits) <= max_edits
+            }
+            if exps:
+                clauses.append({"terms": exps})
+        if not clauses:
             return self._empty_hits(with_docs)
-        return self.top_k(
-            query_text, k=k, with_docs=with_docs, _weights=weights
-        )
+        return self.top_k_bool(Bool(should=clauses), k=k, with_docs=with_docs)
 
     def wildcard_expand(self, pattern: str,
                         max_expansions: int = 50,
@@ -2898,20 +2926,11 @@ class QueryEngine:
         expansion scoring as a disjunctive term with idf(its OWN df)
         — the same deterministic per-expansion contract as
         top_k_wildcard/top_k_fuzzy, reproducible in SQL.  Warm cost:
-        1 dictionary job + the standard top_k machinery (block-max,
-        driver-local gate, deletes, pagination unchanged)."""
-        from sotohp_spark.operators import bm25 as _bm25
-
+        1 dictionary job + the standard top_k_bool machinery
+        (block-max, driver-local gate, deletes, pagination
+        unchanged)."""
         cand = self.regexp_expand(regex, max_expansions)
-        n = self.meta["n_docs"]
-        weights = {
-            t: _bm25.lucene_idf_scalar(n, df) for t, df in cand
-        }
-        if not weights:
-            return self._empty_hits(with_docs)
-        return self.top_k(
-            None, k=k, with_docs=with_docs, _weights=weights
-        )
+        return self._top_k_terms([t for t, _ in cand], k, with_docs)
 
     def top_k_wildcard(self, pattern: str, k: int = 10,
                        max_expansions: int = 50,
@@ -2924,20 +2943,22 @@ class QueryEngine:
         expansion cap keeps the scoring term set bounded (Lucene's
         maxExpansions); expansions are chosen highest-df first.
 
-        Warm cost: 1 dictionary job + the standard top_k machinery
-        (_weights) — block-max pruning, the driver-local gate,
+        Warm cost: 1 dictionary job + the standard top_k_bool
+        machinery — block-max pruning, the driver-local gate,
         deletes, and pagination all apply unchanged."""
-        from sotohp_spark.operators import bm25 as _bm25
-
         cand = self.wildcard_expand(pattern, max_expansions)
-        n = self.meta["n_docs"]
-        weights = {
-            t: _bm25.lucene_idf_scalar(n, df) for t, df in cand
-        }
-        if not weights:
+        return self._top_k_terms([t for t, _ in cand], k, with_docs)
+
+    def _top_k_terms(self, terms: list, k: int,
+                     with_docs: bool) -> DataFrame:
+        """Top-k over dictionary terms as one pre-analyzed should
+        clause, qtf 1 each — top_k_bool gives every term its own
+        idf."""
+        if not terms:
             return self._empty_hits(with_docs)
-        return self.top_k(
-            pattern, k=k, with_docs=with_docs, _weights=weights
+        return self.top_k_bool(
+            Bool(should=[{"terms": {t: 1.0 for t in terms}}]),
+            k=k, with_docs=with_docs,
         )
 
     def explain(self, query_text: str, doc_id: int,
@@ -3032,28 +3053,11 @@ class QueryEngine:
         gate; under it the per-range kernel runs driver-side (see
         _apply_per_range) and consumers aggregate the LocalRelation;
         either way they aggregate or order it themselves."""
-        weights, n_candidates = self.query_weights(query_text, source)
-        if conjunctive and len(weights) < len(
-            set(tokenize(query_text, self._query_rules(source)))
-        ):
-            weights = {}
-        if not weights:
-            return self.spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-        avgdl = self.meta["avgdl"]
-        cfg = self.cfg
-        terms = sorted(weights)
-
-        def score_rows(rows: list, deletes) -> dict:
-            docs, scores = wand.score_range(
-                rows, weights, None, avgdl, conjunctive=conjunctive,
-                cfg=cfg, deletes=deletes,
-            )
-            return {"doc_id": docs, "score": scores}
-
-        return self._apply_per_range(
-            lambda: self._scoring_shards(terms), score_rows, TOPK_SCHEMA,
-            n_candidates=n_candidates, terms=terms,
-            prefilter=(len(terms),) if conjunctive else None,
+        q = self._match_bool(query_text, conjunctive, source)
+        if q is None:
+            return self._empty_hits(False)
+        return self.top_k_bool(
+            q, with_docs=False, source=source, _no_cut=True
         )
 
     def top_k_collapse(self, query_text: str, k: int = 10,
@@ -3357,27 +3361,23 @@ class QueryEngine:
         wrap terms are every positive clause's analyzed text-stream
         terms (must_not never wraps; field-tagged keys highlight
         nothing in the raw text)."""
-        if isinstance(query, Bool):
-            rules = self._query_rules(source)
-            terms: set = set()
-            for text, _b, cfields, cterms in _bool_clauses(
-                tuple(query.must) + tuple(query.should)
-                + tuple(query.filter)
-            ):
-                if cfields is not None and "text" not in [
-                    f if isinstance(f, str) else f[0] for f in cfields
-                ]:
-                    continue
-                if cterms is not None:
-                    terms.update(cterms)
-                else:
-                    terms.update(tokenize(text, rules))
-            top = self.top_k_bool(query, k, with_docs=False,
-                                  source=source)
-            return sorted(terms), top
-        terms = sorted(set(tokenize(query, self._query_rules(source))))
-        return terms, self.top_k(query, k, with_docs=False,
-                                 source=source)
+        if not isinstance(query, Bool):
+            query = Bool(should=[query])
+        rules = self._query_rules(source)
+        terms: set = set()
+        for text, _b, cfields, cterms in _bool_clauses(
+            query.must + query.should + query.filter
+        ):
+            if cfields is not None and "text" not in [
+                f if isinstance(f, str) else f[0] for f in cfields
+            ]:
+                continue
+            if cterms is not None:
+                terms.update(cterms)
+            else:
+                terms.update(tokenize(text, rules))
+        top = self.top_k_bool(query, k, with_docs=False, source=source)
+        return sorted(terms), top
 
     def highlight(self, query_text: str, texts: DataFrame, k: int = 10,
                   text_col: str = "text", id_col: str = "doc_id",
@@ -4297,9 +4297,7 @@ class QueryEngine:
         )[:max_terms]
         if not ranked:
             return self.spark.createDataFrame([], TOPK_SCHEMA).limit(0)
-        mlt_weights = {t: idf(t) for _, t in ranked}  # qtf = 1 per term
-        out = self.top_k("", k + 1, with_docs=False, source=source,
-                         _weights=mlt_weights)
+        out = self._top_k_terms([t for _, t in ranked], k + 1, False)
         return (
             out.where(F.col("doc_id") != int(doc_id))
             .orderBy(F.col("score").desc(), F.col("doc_id").asc())
@@ -4404,26 +4402,18 @@ class QueryEngine:
             term_df.update(dfs)
         if not phrase_terms:
             return self.spark.createDataFrame([], schema).limit(0)
-        # ship the (possibly thousands-of-phrases) term table ONCE per
-        # executor as a broadcast variable instead of pickling it into
-        # every task closure — the same per-task serialization tax
-        # top_k_batch's _batch_bc avoids, and this path advertises the
-        # same eval-sweep scale.  Previous batch's table unpersisted
-        # (not destroyed: an unexecuted DataFrame may lazily rebroadcast).
-        prev = getattr(self, "_phrase_bc", None)
-        if prev is not None:
-            prev.unpersist()
-        bc_terms = self.spark.sparkContext.broadcast(phrase_terms)
-        self._phrase_bc = bc_terms
 
-        def match_rows(rows: list, deletes) -> dict:
-            pairs = conjunctive_match_batch(rows, bc_terms.value, deletes)
+        def match_rows(rows: list, deletes, queries: dict) -> dict:
+            pairs = conjunctive_match_batch(rows, queries, deletes)
             return {"query_id": [q for q, _ in pairs],
                     "doc_id": [d for _, d in pairs]}
 
+        # the (possibly thousands-of-phrases) term table is the shared
+        # broadcast, as in top_k_batch
         return self._apply_per_range(
             lambda: self._scoring_shards(all_terms), match_rows, schema,
             n_candidates=sum(term_df.values()), terms=sorted(all_terms),
+            shared=phrase_terms,
         )
 
     def _phrase_offsets(self, phrase: str, source=None) -> list:
@@ -4625,16 +4615,9 @@ class QueryEngine:
             term_df.update(dfs)
         if not offsets_map:
             return self.spark.createDataFrame([], schema).limit(0)
-        prev = getattr(self, "_phrase_pos_bc", None)
-        if prev is not None:
-            prev.unpersist()
-        bc_offs = self.spark.sparkContext.broadcast(offsets_map)
-        self._phrase_pos_bc = bc_offs
 
-        def match_rows(rows: list, deletes) -> dict:
-            pairs = positional_phrase_match_batch(
-                rows, bc_offs.value, deletes
-            )
+        def match_rows(rows: list, deletes, offsets: dict) -> dict:
+            pairs = positional_phrase_match_batch(rows, offsets, deletes)
             return {"query_id": [q for q, _ in pairs],
                     "doc_id": [d for _, d in pairs]}
 
@@ -4642,7 +4625,7 @@ class QueryEngine:
         return self._apply_per_range(
             lambda: self._postings.where(F.col("term").isin(terms)),
             match_rows, schema, n_candidates=sum(term_df.values()),
-            pos_terms=terms,
+            pos_terms=terms, shared=offsets_map,
         )
 
     @staticmethod

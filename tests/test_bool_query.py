@@ -328,3 +328,54 @@ def test_match_bool_prefix(bool_setup):
         "zzqx", k=5, with_docs=False).count() == 0
     assert engine.top_k_match_bool_prefix(
         "", k=5, with_docs=False).count() == 0
+
+
+# 63 distinct single-letter-run words: one past the 62 clause groups a
+# BoolSpec can hold
+WIDE = [f"k{chr(97 + i // 26)}{chr(97 + i % 26)}" for i in range(63)]
+
+
+@pytest.fixture(scope="module")
+def wide_setup(spark, tmp_path_factory):
+    """Every third doc holds all 63 WIDE words (one of them repeated,
+    so scores differ); the rest hold about two thirds of them."""
+    import pandas as pd
+
+    texts = []
+    for i in range(48):
+        words = [w for j, w in enumerate(WIDE)
+                 if i % 3 == 0 or (i + j) % 3 != 0]
+        words += [WIDE[i % 63]] * (i % 5)
+        texts.append(" ".join(words))
+    pdf = pd.DataFrame(
+        [(f"w{i:03d}", 0, pd.Timestamp("2025-01-01")
+          + pd.Timedelta(minutes=i), "user", t, None)
+         for i, t in enumerate(texts)],
+        columns=["conv_id", "turn_idx", "ts", "role", "text", "tool"],
+    )
+    path = str(tmp_path_factory.mktemp("boolwide") / "idx")
+    IndexBuilder(spark, path, CFG).build(
+        spark.createDataFrame(pdf), input_fingerprint="wide"
+    )
+    return QueryEngine(spark, path), Bm25Oracle(pdf)
+
+
+def test_shape_rule_runs_wide_conjunctions_and_n_of_m(wide_setup):
+    """The clause-shape rule: 63 single distinct-term must clauses run
+    the conjunctive kernel and 63 single-term should clauses under
+    minimum_should_match > 1 the N-of-M kernel, so neither hits the
+    62-group BoolSpec limit; a 63-term conjunctive top_k compiles to
+    the first shape and still matches brute force."""
+    engine, oracle = wide_setup
+    assert_matches(engine, oracle, Bool(must=WIDE))
+    assert_matches(engine, oracle,
+                   Bool(should=WIDE, minimum_should_match=2), k=20)
+    assert_matches(engine, oracle,
+                   Bool(should=WIDE, minimum_should_match=60), k=20)
+    got = engine.top_k(" ".join(WIDE), k=10, conjunctive=True,
+                       with_docs=False).collect()
+    want = brute_bool(oracle, Bool(must=WIDE))
+    assert len(want) == 10
+    assert [r["doc_id"] for r in got] == [d for d, _ in want]
+    assert np.allclose([r["score"] for r in got], [s for _, s in want],
+                       atol=1e-6, rtol=0)

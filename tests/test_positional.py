@@ -303,6 +303,37 @@ def test_phrase_batch_positional_equals_individual(spark, pos_index):
         assert {p for p in pairs if p[0] == qid} == want_q, (qid, ph)
 
 
+def test_batch_broadcasts_only_on_distributed_leg(spark, pos_index,
+                                                  monkeypatch):
+    """The batch surfaces' shared query table is broadcast only when
+    the distributed leg runs: a driver-local call broadcasts nothing,
+    and both legs return the same rows."""
+    from pyspark import SparkContext
+
+    path, _ = pos_index
+    calls = []
+    broadcast = SparkContext.broadcast
+
+    def counting(self, value):
+        calls.append(value)
+        return broadcast(self, value)
+
+    monkeypatch.setattr(SparkContext, "broadcast", counting)
+    local = QueryEngine(spark, path)
+    dist = QueryEngine(spark, path)
+    dist.LOCAL_PATH_MAX_POSTINGS = 0
+    queries = [("a", "error retry"), ("b", "do it do")]
+    for name in ("matching_doc_ids_batch", "phrase_match_doc_ids_batch"):
+        calls.clear()
+        want = sorted(tuple(r) for r in
+                      getattr(local, name)(queries).collect())
+        assert not calls, name
+        got = sorted(tuple(r) for r in
+                     getattr(dist, name)(queries).collect())
+        assert calls, name
+        assert got == want and want, name
+
+
 def test_phrase_batch_positional_refuses_positionless(spark, tmp_path):
     cfg_n = EngineConfig(range_size=16, block_size=4, ranges_per_batch=2,
                          shuffle_partitions=4)
