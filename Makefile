@@ -2,7 +2,7 @@
 # reference Makefile:33-36 runs tests with search mocked — here the
 # oracle takes that role and needs nothing external).
 
-.PHONY: test test-fast test-query selfcheck bench perfbench scaling package submit-smoke
+.PHONY: test test-fast test-query test-refresh selfcheck bench perfbench scaling package submit-smoke
 
 # zip for spark-submit --py-files on a real cluster
 package:
@@ -37,6 +37,14 @@ test-query:
 	  tests/test_bool_query.py tests/test_positional.py \
 	  tests/test_phrase_ranked.py tests/test_search_features.py \
 	  tests/test_query_string.py tests/test_aggregations.py -q
+
+# what a refresh reuses across engines (tests/test_refresh_reuse.py)
+# and the index lifecycle suites whose writes it must see through
+test-refresh:
+	python -m pytest tests/test_refresh_reuse.py tests/test_visibility.py \
+	  tests/test_incremental.py tests/test_deletes.py \
+	  tests/test_compact_buckets.py tests/test_merge_segments.py \
+	  tests/test_compact_crash.py -q
 
 selfcheck:
 	python scripts/selfcheck.py

@@ -237,18 +237,27 @@ def move_dir(spark, src: str, dst: str) -> None:
 def list_files(spark, path: str) -> list:
     """Every regular file under ``path`` recursively as sorted
     (relative_path, size_bytes) pairs — the manifest primitive
-    snapshot/restore uses.  Local paths walk the OS tree; remote
-    paths use FileSystem.listFiles(recursive=true), so the same
-    manifest works on HDFS/S3A."""
+    snapshot/restore uses."""
+    return [(rel, size) for rel, size, _ in list_file_stats(spark, path)]
+
+
+def list_file_stats(spark, path: str) -> list:
+    """Every regular file under ``path`` recursively as sorted
+    (relative_path, size_bytes, mtime_ms) triples — a file's identity
+    for readers that reuse what they built from an unchanged file.
+    Local paths walk the OS tree; remote paths use
+    FileSystem.listFiles(recursive=true), so the same manifest works
+    on HDFS/S3A."""
     out = []
     if not is_remote(path):
         base = os.path.abspath(path)
         for root, _dirs, files in os.walk(base):
             for name in files:
                 full = os.path.join(root, name)
+                st = os.stat(full)
                 out.append(
                     (os.path.relpath(full, base).replace(os.sep, "/"),
-                     os.path.getsize(full))
+                     st.st_size, st.st_mtime_ns // 1_000_000)
                 )
         return sorted(out)
     fs, p, _ = _jfs(spark, path)
@@ -260,7 +269,7 @@ def list_files(spark, path: str) -> list:
         st = it.next()
         full = st.getPath().toString()
         rel = full[len(base_uri):] if full.startswith(base_uri) else full
-        out.append((rel, int(st.getLen())))
+        out.append((rel, int(st.getLen()), int(st.getModificationTime())))
     return sorted(out)
 
 

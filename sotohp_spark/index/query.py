@@ -26,9 +26,12 @@ same code path (score_range), used when the shard count is tiny.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import logging
 import threading
+import weakref
+from collections.abc import Mapping
 
 import pandas as pd
 
@@ -171,6 +174,136 @@ def _edit_distance(a: str, b: str, cap: int) -> int:
     return prev[-1]
 
 
+# What a refresh reuses.  A parquet index directory's data files are
+# immutable once listed: appends add files, merges and compactions
+# write new ones and remove the old, and a rolled-back append removes
+# its files.  So whatever an engine builds from a directory listing
+# (its reader DataFrame, the term dictionary, the tombstone array) or
+# from one postings file (that file's shard rows) is valid for any
+# later engine that lists the same file identities (path, size,
+# mtime).  Entries live only while some engine holds them — the
+# registry maps weakly, engines hold strongly — so it pins no memory
+# beyond what live engines pin anyway, and a file no longer listed is
+# never looked up again.
+_REUSE_LOCK = threading.Lock()
+_REUSE: "weakref.WeakValueDictionary" = weakref.WeakValueDictionary()
+
+
+def _registered(key, entry=None):
+    """The live registry entry under ``key`` (None if there is none);
+    given ``entry``, register it there unless another engine got there
+    first — the first registration wins and every racer holds it."""
+    with _REUSE_LOCK:
+        if entry is None:
+            return _REUSE.get(key)
+        return _REUSE.setdefault(key, entry)
+
+
+def _data_files(spark, root: str) -> tuple:
+    """The (path, size, mtime) identity of every data file under
+    ``root`` that Spark's file reader lists: names starting with ``.``,
+    or with ``_`` outside a partition directory, are not data."""
+    from sotohp_spark import fsio
+
+    return tuple(
+        f for f in fsio.list_file_stats(spark, root)
+        if not any(
+            p.startswith(".") or (p.startswith("_") and "=" not in p)
+            for p in f[0].split("/")
+        )
+    )
+
+
+def _rel_path(uri: str, root_name: str) -> str:
+    """A data file's path below its index directory, from the URI
+    Spark reports for it (inputFiles, input_file_name)."""
+    from urllib.parse import unquote
+
+    return unquote(uri).rsplit(f"/{root_name}/", 1)[-1]
+
+
+class _DirState:
+    """What engines built from one index directory as listed: its
+    reader DataFrame and ``value``, the driver state derived from it
+    (the term dictionary; the tombstone count and array).  ``files``
+    is the listing, or None when the reader saw other files than the
+    listing (a concurrent writer) — such an entry is never shared."""
+
+    __slots__ = ("reader", "files", "value", "__weakref__")
+
+    def __init__(self, reader, files):
+        self.reader = reader
+        self.files = files
+        self.value = None
+
+
+class _FileRows:
+    """One postings data file's shard rows in the scoring projection,
+    unguarded and grouped by term, with their payload bytes and sorted
+    first_doc values (so each engine counts and masks by its own
+    committed max_doc)."""
+
+    __slots__ = ("by_term", "firsts", "payload", "__weakref__")
+
+    def __init__(self, rows: list):
+        import numpy as np
+
+        by_term: dict[str, list] = {}
+        for r in rows:
+            by_term.setdefault(r["term"], []).append(r)
+        self.by_term = by_term
+        self.firsts = np.sort(np.fromiter(
+            (r["first_doc"] for r in rows), np.int64, len(rows)))
+        self.payload = sum(len(r["payload"] or b"") for r in rows)
+
+
+class _ShardRows(Mapping):
+    """term -> driver-tier shard rows of one engine: the rows of its
+    postings files under its committed-snapshot guard (first_doc <=
+    max_doc).  A read-only view; rows are shared with other engines
+    and never mutated by scoring."""
+
+    def __init__(self, files: list, max_doc: int):
+        self._held = files
+        self._max_doc = max_doc
+        self._parts = [
+            (f.by_term, not f.firsts.size or int(f.firsts[-1]) <= max_doc)
+            for f in files
+        ]
+
+    def get(self, term, default=None):
+        rows: list = []
+        for by_term, committed in self._parts:
+            part = by_term.get(term)
+            if part:
+                rows += part if committed else [
+                    r for r in part if r["first_doc"] <= self._max_doc
+                ]
+        return rows or default
+
+    def __getitem__(self, term):
+        rows = self.get(term)
+        if rows is None:
+            raise KeyError(term)
+        return rows
+
+    def __iter__(self):
+        terms = sorted({t for by_term, _ in self._parts for t in by_term})
+        return (t for t in terms if self.get(t))
+
+    def __len__(self):
+        return sum(1 for _ in self)
+
+    def count(self) -> int:
+        """Shard rows visible to this engine."""
+        import numpy as np
+
+        return sum(
+            int(np.searchsorted(f.firsts, self._max_doc, side="right"))
+            for f in self._held
+        )
+
+
 class QueryEngine:
     # candidate postings below this count are scored on the driver
     # (same score_range code, no Spark job) — the interactive path;
@@ -208,7 +341,18 @@ class QueryEngine:
         it resolves from ``cfg`` — a configured ``iceberg_table_prefix``
         (with the runtime present) opens the catalog tables, otherwise
         the parquet layout at ``index_path``.  Every query path below
-        is leg-independent: it sees only DataFrames + meta."""
+        is leg-independent: it sees only DataFrames + meta.
+
+        An engine is a snapshot at open: meta is read after recovery,
+        and the postings are masked to its committed ``max_doc``.  On
+        the parquet leg a refresh (a new engine over the same index)
+        reuses what live engines built from unchanged files: a
+        directory whose data files list the same (path, size, mtime)
+        keeps its reader, its term dictionary (preload_term_stats) and
+        its tombstone array, so opening over an unchanged index runs no
+        Spark job; cache_postings reuses shard rows per postings file.
+        The per-engine frames (the guard, the projections, ``.cache()``)
+        are always derived fresh."""
         self.spark = spark
         self.rules = rules
         if store is None and index_path is not None:
@@ -270,14 +414,12 @@ class QueryEngine:
                 else DEFAULT.shuffle_partitions
             ),
         )
-        if store.kind == "parquet":
-            raw_postings = spark.read.option(
-                "basePath", f"{self.path}/postings"
-            ).parquet(f"{self.path}/postings")
-        else:
-            raw_postings = store.read_postings()
+        # the index directories' readers and driver state, shared with
+        # every live engine that lists the same files (see _REUSE)
+        self._app = spark.sparkContext.applicationId
+        self._dirs: dict[str, _DirState] = {}
         self._postings = (
-            raw_postings
+            self._dir("postings").reader
             # COMMITTED-SNAPSHOT GUARD: phase 1 of a concurrent 2-phase
             # append moves postings files into the live tree BEFORE the
             # docs-table commit; their shards cover only doc ids above
@@ -316,13 +458,14 @@ class QueryEngine:
         self._postings_hot: DataFrame | None = None
         self._hot_terms: frozenset | None = None
         # r08 driver-tier hot postings: term -> list of shard-row dicts
-        # (the scoring projection), populated by cache_postings(None)
+        # (the scoring projection, a _ShardRows view over per-file rows
+        # shared across engines), populated by cache_postings(None)
         # when the whole payload fits DRIVER_POSTINGS_CACHE_MAX_BYTES.
         # The driver-local fast path then scores straight from these
         # rows — ZERO Spark jobs per warm query instead of one pruned
         # collect per query (the ES search-tier in-heap postings
         # posture).  Rows are never mutated by scoring (shared safely).
-        self._driver_shards: dict | None = None
+        self._driver_shards: _ShardRows | None = None
         # driver-tier docs metadata beside the shard rows (see
         # cache_postings and _driver_docs_tier): the doc_id-sorted
         # HITS_COLUMNS minus score, or None while off.  _driver_docs_room
@@ -330,7 +473,9 @@ class QueryEngine:
         self._driver_docs: pd.DataFrame | None = None
         self._driver_docs_room: int | None = None
         self._hits_struct: T.StructType | None = None
-        self._term_stats = store.read_term_stats()
+        # the typed empty answers, by with_docs (see _empty_hits)
+        self._empty: dict[bool, DataFrame] = {}
+        self._term_stats = self._dir("term_stats").reader
         self._df_cache: dict | None = None
         # explicit projection -> the tfs map column (kept for the
         # postings build) is pruned out of every docs scan; range_bucket
@@ -339,11 +484,7 @@ class QueryEngine:
         # partition column — derive it (no pruning, same semantics) so
         # the engine stays READ-compatible across layouts (the offline
         # migrator upgrades writes; reads must not require it).
-        docs = (
-            spark.read.parquet(f"{self.path}/docs")
-            if store.kind == "parquet"
-            else store.read_docs()
-        )
+        docs = self._dir("docs").reader
         if "range_bucket" not in docs.columns:
             span = self.cfg.range_size * self.cfg.ranges_per_batch
             docs = docs.withColumn(
@@ -378,11 +519,12 @@ class QueryEngine:
         Small delete sets (<= MAX_DRIVER_DELETES) are collected once:
         the array rides into the scoring closures and keeps the
         driver-local interactive path available.  Large delete sets are
-        NEVER collected: ``self._deletes`` stays None and every scoring
-        path cogroups the deletes DataFrame with the postings on
-        range_id — per-range delete bitmaps co-partitioned with the
-        shards, O(deletes-in-range) per task, no driver OOM and no
-        per-task broadcast of a global array."""
+        never collected past MAX_DRIVER_DELETES + 1 rows (one bounded
+        collect both sizes and fetches them): ``self._deletes`` stays
+        None and every scoring path cogroups the deletes DataFrame with
+        the postings on range_id — per-range delete bitmaps
+        co-partitioned with the shards, O(deletes-in-range) per task,
+        no driver OOM and no per-task broadcast of a global array."""
         import numpy as np
 
         if self.store.kind == "parquet":
@@ -390,19 +532,65 @@ class QueryEngine:
 
             if not IndexBuilder(self.spark, self.path).has_deletes():
                 return np.zeros(0, dtype=np.int64)
-            df = self.spark.read.parquet(
-                f"{self.path}/deletes"
-            ).select("doc_id")
-        else:
-            if not self.store.has_deletes():
-                return np.zeros(0, dtype=np.int64)
-            df = self.store.read_deletes().select("doc_id")
-        self._deletes_df = df
-        n = df.count()
+        elif not self.store.has_deletes():
+            return np.zeros(0, dtype=np.int64)
+        entry = self._dir("deletes")
+        df = self._deletes_df = entry.reader.select("doc_id")
+        # shared by the engines on this listing: (n, every id) from n
+        # rows, or (n, None) when there are at least n rows
+        n, arr = entry.value or (0, None)
+        if arr is None and n <= self.MAX_DRIVER_DELETES:
+            rows = df.limit(self.MAX_DRIVER_DELETES + 1).collect()
+            n = len(rows)
+            if n <= self.MAX_DRIVER_DELETES:
+                arr = np.unique(np.array(
+                    [r["doc_id"] for r in rows], dtype=np.int64))
+                arr.flags.writeable = False
+            entry.value = (n, arr)
         if n > self.MAX_DRIVER_DELETES:
             return None  # distributed-only: see _scored_ranges
-        rows = df.collect()
-        return np.unique(np.array([r["doc_id"] for r in rows], dtype=np.int64))
+        return arr
+
+    def _dir(self, name: str) -> _DirState:
+        """The reader of index directory ``name`` (postings, docs,
+        term_stats or deletes) with its shared driver state.  On the
+        parquet leg the entry is shared with every live engine whose
+        listing of that directory has the same data files; the reader is
+        created (one schema-inference job) only when none does.  The
+        catalog leg opens its table reader on every engine."""
+        if self.store.kind != "parquet":
+            read = getattr(self.store, f"read_{name}")
+            entry = self._dirs[name] = _DirState(read(), None)
+            return entry
+        root = f"{self.path}/{name}"
+        files = _data_files(self.spark, root)
+        key = (self._app, root, files)
+        entry = _registered(key)
+        if entry is None:
+            # Spark's cache matches file relations by root path, not by
+            # the files listed, so a frame an engine cached over an older
+            # listing would serve a newer engine stale or deleted files;
+            # the reader carries its listing's digest to keep them apart
+            read = self.spark.read.option("basePath", root).option(
+                "sotohp.listing",
+                hashlib.sha1(repr(files).encode()).hexdigest(),
+            )
+            # Spark infers a directory's schema from one of its files, so
+            # a live listing that shares a file with this one already
+            # has it: reading with it skips the inference job
+            last = _registered((self._app, root))
+            if last is not None and not set(last.files).isdisjoint(files):
+                read = read.schema(last.reader.schema)
+            reader = read.parquet(root)
+            seen = {_rel_path(u, name) for u in reader.inputFiles()}
+            if seen == {f[0] for f in files}:
+                entry = _registered(key, _DirState(reader, files))
+                with _REUSE_LOCK:
+                    _REUSE[(self._app, root)] = entry
+            else:
+                entry = _DirState(reader, None)  # a writer moved files
+        self._dirs[name] = entry
+        return entry
 
     def _deletes_by_range(self) -> DataFrame:
         """Deletes keyed like the postings: range_id = doc_id // range_size."""
@@ -522,9 +710,16 @@ class QueryEngine:
         runs no Spark job; with only the shard tier its metadata comes
         from the docs join.
 
-        Returns the number of cached shard rows (materializes the
-        cache).  Re-invocation releases the previous pin (both driver
-        tiers included) first."""
+        The driver shard rows are held per postings data file and
+        shared with every live engine on the same index: a re-pin after
+        an append collects only the appended files, and a re-pin over
+        an unchanged index runs no Spark job.  With the driver tier on,
+        the executor cache is marked but not materialized here — the
+        first distributed-leg read fills it; with it off, one count
+        materializes it.
+
+        Returns the number of cached shard rows.  Re-invocation
+        releases the previous pin (both driver tiers included) first."""
         if self._postings_hot is not None:
             self._postings_hot.unpersist()
         self._driver_shards = None
@@ -545,31 +740,23 @@ class QueryEngine:
             # the driver budget, also pin the shard rows in driver
             # memory — the local fast path then runs with zero Spark
             # jobs per query.  Scale-adaptive: past the budget (any
-            # big corpus) this silently stays off and the per-query
+            # big corpus) this silently stays off, one count
+            # materializes the executor cache, and the per-query
             # pruned collect path is unchanged; the selective
-            # (top_terms=N) posture never builds it.  ONE agg both
-            # materializes the executor cache and returns the row
-            # count + payload bytes.
+            # (top_terms=N) posture never builds it.
             scoring_view = hot
             if "pos_offsets" in scoring_view.columns:
                 scoring_view = scoring_view.drop(
                     "pos_offsets", "pos_payload"
                 )
-            probe = scoring_view.agg(
-                F.count(F.lit(1)),
-                F.coalesce(
-                    F.sum(F.length(F.col("payload"))), F.lit(0)
-                ),
-            ).collect()[0]
-            n = int(probe[0])
-            total_payload = int(probe[1])
-            if int(total_payload) <= self.DRIVER_POSTINGS_CACHE_MAX_BYTES:
-                cache: dict[str, list] = {}
-                for r in scoring_view.collect():
-                    cache.setdefault(r["term"], []).append(r.asDict())
-                self._driver_shards = cache
+            tier = self._pin_shard_rows(scoring_view)
+            if tier is None:
+                n = scoring_view.count()
+            else:
+                self._driver_shards, payload = tier
+                n = tier[0].count()
                 self._driver_docs_room = (
-                    self.DRIVER_POSTINGS_CACHE_MAX_BYTES - total_payload
+                    self.DRIVER_POSTINGS_CACHE_MAX_BYTES - payload
                 )
             # pin the docs METADATA projection too (doc_id, conv_id,
             # doc_ts, n_turns, doc_len — never text/tfs): every
@@ -592,6 +779,63 @@ class QueryEngine:
         hot = base.where(F.col("term").isin(hot_list)).cache()
         self._postings_hot = hot
         return hot.count()
+
+    def _pin_shard_rows(self, scoring_view: DataFrame):
+        """(shard rows, payload bytes) of the driver shard tier, or None
+        when the scoring payload exceeds DRIVER_POSTINGS_CACHE_MAX_BYTES.
+
+        The rows of a postings file some live engine already holds are
+        reused; only the other files are probed for their payload and,
+        when the total fits, collected once with each row tagged by its
+        source file.  The view masks rows past this engine's committed
+        max_doc, so a file moved in by a pending append is held but
+        never served before the docs commit.  Without a shareable
+        listing (the catalog leg, or a writer raced the open) the
+        guarded ``scoring_view`` is probed and collected whole."""
+        budget = self.DRIVER_POSTINGS_CACHE_MAX_BYTES
+        postings = self._dirs["postings"]
+
+        def payload_of(df: DataFrame) -> int:
+            return df.agg(
+                F.coalesce(F.sum(F.length("payload")), F.lit(0))
+            ).collect()[0][0]
+
+        if postings.files is None:
+            if payload_of(scoring_view) > budget:
+                return None
+            rows = [_FileRows([r.asDict() for r in scoring_view.collect()])]
+        else:
+            root = f"{self.path}/postings"
+            held = {
+                f: _registered((self._app, root, *f)) for f in postings.files
+            }
+            missing = [f for f, e in held.items() if e is None]
+            payload = sum(e.payload for e in held.values() if e is not None)
+            if payload > budget:
+                return None
+            if missing:
+                new = postings.reader if len(missing) == len(held) else (
+                    self.spark.read.schema(postings.reader.schema)
+                    .option("basePath", root)
+                    .parquet(*[f"{root}/{f[0]}" for f in missing])
+                )
+                new = new.drop("pos_offsets", "pos_payload")
+                if payload + payload_of(new) > budget:
+                    return None
+                by_file: dict[str, list] = {f[0]: [] for f in missing}
+                tagged = new.withColumn("_file", F.input_file_name())
+                for r in tagged.collect():
+                    d = r.asDict()
+                    by_file[_rel_path(d.pop("_file"), "postings")].append(d)
+                for f in missing:
+                    held[f] = _registered(
+                        (self._app, root, *f), _FileRows(by_file[f[0]])
+                    )
+            rows = [held[f] for f in postings.files]
+        return (
+            _ShardRows(rows, int(self.meta["max_doc"])),
+            sum(f.payload for f in rows),
+        )
 
     def _scoring_shards(self, terms) -> DataFrame:
         """Postings shards for ``terms`` (positionless projection),
@@ -624,10 +868,13 @@ class QueryEngine:
         cache).  Vocabulary is O(distinct terms) — fine up to tens of
         millions; beyond that leave it off and pay one pruned parquet
         lookup per query."""
-        self._df_cache = {
-            r["term"]: int(r["df"])
-            for r in self._term_stats.select("term", "df").collect()
-        }
+        entry = self._dirs["term_stats"]
+        if entry.value is None:
+            entry.value = {
+                r["term"]: int(r["df"])
+                for r in self._term_stats.select("term", "df").collect()
+            }
+        self._df_cache = entry.value
         return len(self._df_cache)
 
     def _coerce_ts(self, v):
@@ -2347,9 +2594,16 @@ class QueryEngine:
 
     def _empty_hits(self, with_docs: bool) -> DataFrame:
         """A typed empty result — (doc_id, score), or the _attach_docs
-        schema with ``with_docs`` — without planning a join."""
-        schema = self._hits_schema() if with_docs else TOPK_SCHEMA
-        return self.spark.createDataFrame([], schema).limit(0)
+        schema with ``with_docs`` — without planning a join.  Built once
+        per schema and engine: a DataFrame is immutable, so every empty
+        answer can hand out the same one."""
+        empty = self._empty.get(with_docs)
+        if empty is None:
+            schema = self._hits_schema() if with_docs else TOPK_SCHEMA
+            empty = self._empty[with_docs] = self.spark.createDataFrame(
+                [], schema
+            ).limit(0)
+        return empty
 
     def _attach_docs(self, topk: DataFrame) -> DataFrame:
         """Join doc metadata onto a (tiny) top-k frame.
