@@ -1861,7 +1861,7 @@ def _transcripts_stream_ingest_topk(spark, sf_dir):
 
 def _transcripts_doc_stats(spark, sf_dir):
     engine, _ = _transcript_index(spark, sf_dir)
-    return engine._docs.agg(
+    return engine._snap.docs.agg(
         F.count("*").alias("n_docs"),
         F.round(F.avg("doc_len"), 6).alias("avgdl"),
         F.sum("n_turns").alias("n_turns"),

@@ -26,12 +26,8 @@ same code path (score_range), used when the shard count is tiny.
 
 from __future__ import annotations
 
-import hashlib
-import json
 import logging
 import threading
-import weakref
-from collections.abc import Mapping
 
 import pandas as pd
 
@@ -41,19 +37,11 @@ from pyspark.sql import types as T
 
 from sotohp_spark.config import EngineConfig, DEFAULT
 from sotohp_spark.functions.tokenizer import KeywordRules, tokenize
+from sotohp_spark.index import reader
+from sotohp_spark.index.reader import HITS_COLUMNS, TOPK_SCHEMA
 from sotohp_spark.operators import bm25, wand
 
 log = logging.getLogger(__name__)
-
-TOPK_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType(), False),
-        T.StructField("score", T.DoubleType(), False),
-    ]
-)
-
-# the with_docs result columns, in order (_attach_docs / _hits_schema)
-HITS_COLUMNS = ("doc_id", "conv_id", "score", "doc_ts", "n_turns", "doc_len")
 
 
 from dataclasses import dataclass  # noqa: E402
@@ -174,136 +162,6 @@ def _edit_distance(a: str, b: str, cap: int) -> int:
     return prev[-1]
 
 
-# What a refresh reuses.  A parquet index directory's data files are
-# immutable once listed: appends add files, merges and compactions
-# write new ones and remove the old, and a rolled-back append removes
-# its files.  So whatever an engine builds from a directory listing
-# (its reader DataFrame, the term dictionary, the tombstone array) or
-# from one postings file (that file's shard rows) is valid for any
-# later engine that lists the same file identities (path, size,
-# mtime).  Entries live only while some engine holds them — the
-# registry maps weakly, engines hold strongly — so it pins no memory
-# beyond what live engines pin anyway, and a file no longer listed is
-# never looked up again.
-_REUSE_LOCK = threading.Lock()
-_REUSE: "weakref.WeakValueDictionary" = weakref.WeakValueDictionary()
-
-
-def _registered(key, entry=None):
-    """The live registry entry under ``key`` (None if there is none);
-    given ``entry``, register it there unless another engine got there
-    first — the first registration wins and every racer holds it."""
-    with _REUSE_LOCK:
-        if entry is None:
-            return _REUSE.get(key)
-        return _REUSE.setdefault(key, entry)
-
-
-def _data_files(spark, root: str) -> tuple:
-    """The (path, size, mtime) identity of every data file under
-    ``root`` that Spark's file reader lists: names starting with ``.``,
-    or with ``_`` outside a partition directory, are not data."""
-    from sotohp_spark import fsio
-
-    return tuple(
-        f for f in fsio.list_file_stats(spark, root)
-        if not any(
-            p.startswith(".") or (p.startswith("_") and "=" not in p)
-            for p in f[0].split("/")
-        )
-    )
-
-
-def _rel_path(uri: str, root_name: str) -> str:
-    """A data file's path below its index directory, from the URI
-    Spark reports for it (inputFiles, input_file_name)."""
-    from urllib.parse import unquote
-
-    return unquote(uri).rsplit(f"/{root_name}/", 1)[-1]
-
-
-class _DirState:
-    """What engines built from one index directory as listed: its
-    reader DataFrame and ``value``, the driver state derived from it
-    (the term dictionary; the tombstone count and array).  ``files``
-    is the listing, or None when the reader saw other files than the
-    listing (a concurrent writer) — such an entry is never shared."""
-
-    __slots__ = ("reader", "files", "value", "__weakref__")
-
-    def __init__(self, reader, files):
-        self.reader = reader
-        self.files = files
-        self.value = None
-
-
-class _FileRows:
-    """One postings data file's shard rows in the scoring projection,
-    unguarded and grouped by term, with their payload bytes and sorted
-    first_doc values (so each engine counts and masks by its own
-    committed max_doc)."""
-
-    __slots__ = ("by_term", "firsts", "payload", "__weakref__")
-
-    def __init__(self, rows: list):
-        import numpy as np
-
-        by_term: dict[str, list] = {}
-        for r in rows:
-            by_term.setdefault(r["term"], []).append(r)
-        self.by_term = by_term
-        self.firsts = np.sort(np.fromiter(
-            (r["first_doc"] for r in rows), np.int64, len(rows)))
-        self.payload = sum(len(r["payload"] or b"") for r in rows)
-
-
-class _ShardRows(Mapping):
-    """term -> driver-tier shard rows of one engine: the rows of its
-    postings files under its committed-snapshot guard (first_doc <=
-    max_doc).  A read-only view; rows are shared with other engines
-    and never mutated by scoring."""
-
-    def __init__(self, files: list, max_doc: int):
-        self._held = files
-        self._max_doc = max_doc
-        self._parts = [
-            (f.by_term, not f.firsts.size or int(f.firsts[-1]) <= max_doc)
-            for f in files
-        ]
-
-    def get(self, term, default=None):
-        rows: list = []
-        for by_term, committed in self._parts:
-            part = by_term.get(term)
-            if part:
-                rows += part if committed else [
-                    r for r in part if r["first_doc"] <= self._max_doc
-                ]
-        return rows or default
-
-    def __getitem__(self, term):
-        rows = self.get(term)
-        if rows is None:
-            raise KeyError(term)
-        return rows
-
-    def __iter__(self):
-        terms = sorted({t for by_term, _ in self._parts for t in by_term})
-        return (t for t in terms if self.get(t))
-
-    def __len__(self):
-        return sum(1 for _ in self)
-
-    def count(self) -> int:
-        """Shard rows visible to this engine."""
-        import numpy as np
-
-        return sum(
-            int(np.searchsorted(f.firsts, self._max_doc, side="right"))
-            for f in self._held
-        )
-
-
 class QueryEngine:
     # candidate postings below this count are scored on the driver
     # (same score_range code, no Spark job) — the interactive path;
@@ -343,16 +201,16 @@ class QueryEngine:
         the parquet layout at ``index_path``.  Every query path below
         is leg-independent: it sees only DataFrames + meta.
 
-        An engine is a snapshot at open: meta is read after recovery,
-        and the postings are masked to its committed ``max_doc``.  On
+        An engine holds one immutable snapshot (index/reader.py),
+        opened here: meta after recovery, the directory readers, the
+        postings masked to the committed ``max_doc``, the docs
+        projections and the tombstones.  Queries read it once and keep
+        it; preload_term_stats and cache_postings publish a new one
+        with one assignment, so they never tear a query in flight.  On
         the parquet leg a refresh (a new engine over the same index)
-        reuses what live engines built from unchanged files: a
-        directory whose data files list the same (path, size, mtime)
-        keeps its reader, its term dictionary (preload_term_stats) and
-        its tombstone array, so opening over an unchanged index runs no
-        Spark job; cache_postings reuses shard rows per postings file.
-        The per-engine frames (the guard, the projections, ``.cache()``)
-        are always derived fresh."""
+        reuses what live engines built from unchanged files — readers,
+        term dictionary, tombstones, shard rows — so opening over an
+        unchanged index runs no Spark job."""
         self.spark = spark
         self.rules = rules
         if store is None and index_path is not None:
@@ -365,35 +223,12 @@ class QueryEngine:
             raise ValueError("QueryEngine needs index_path or store")
         self.store = store
         self.path = index_path.rstrip("/") if index_path else None
-        if store.kind == "parquet":
-            from sotohp_spark import fsio
-            from sotohp_spark.index.build import recover_pending_compact
-
-            # engine open = recovery point: an interrupted compaction
-            # swap (full or bucket-local) is finished here, so a reader
-            # never sees a missing/torn index
-            recover_pending_compact(spark, self.path)
-            from sotohp_spark.index.build import IndexBuilder
-            from sotohp_spark.streaming.incremental import (
-                _recover_pending_bucket_compact,
-            )
-
-            _recover_pending_bucket_compact(
-                spark, IndexBuilder(spark, self.path)
-            )
-            self.meta = json.loads(
-                fsio.read_text(spark, f"{self.path}/_meta/meta.json")
-            )
-        else:
-            # catalog leg: the open reconciles pending commit points
-            # (roll forward/back via snapshot ids) — the catalog form
-            # of the marker recovery above
-            store.recover()
-            self.meta = store.read_meta()
-            if self.meta is None:
-                raise ValueError(
-                    f"no catalog index at prefix {store.prefix}"
-                )
+        if max_driver_deletes is not None:
+            self.MAX_DRIVER_DELETES = max_driver_deletes
+        self._snap = reader.open_snapshot(
+            spark, store, self.path, self.MAX_DRIVER_DELETES
+        )
+        meta = self._snap.meta
         # GEOMETRY COMES FROM META, NEVER FROM THE CALLER'S CFG: the
         # on-disk partition key (range_bucket), block layout, and range
         # boundaries were fixed at build time.  A caller cfg exists to
@@ -404,40 +239,15 @@ class QueryEngine:
         # zero rows (compact_buckets guards against exactly this class;
         # the engine must too).
         self.cfg = EngineConfig(
-            k1=cfg.k1 if cfg is not None else self.meta["k1"],
-            b=cfg.b if cfg is not None else self.meta["b"],
-            range_size=self.meta["range_size"],
-            block_size=self.meta["block_size"],
-            ranges_per_batch=self.meta.get("ranges_per_batch", 8),
+            k1=cfg.k1 if cfg is not None else meta["k1"],
+            b=cfg.b if cfg is not None else meta["b"],
+            range_size=meta["range_size"],
+            block_size=meta["block_size"],
+            ranges_per_batch=meta.get("ranges_per_batch", 8),
             shuffle_partitions=(
                 cfg.shuffle_partitions if cfg is not None
                 else DEFAULT.shuffle_partitions
             ),
-        )
-        # the index directories' readers and driver state, shared with
-        # every live engine that lists the same files (see _REUSE)
-        self._app = spark.sparkContext.applicationId
-        self._dirs: dict[str, _DirState] = {}
-        self._postings = (
-            self._dir("postings").reader
-            # COMMITTED-SNAPSHOT GUARD: phase 1 of a concurrent 2-phase
-            # append moves postings files into the live tree BEFORE the
-            # docs-table commit; their shards cover only doc ids above
-            # this engine's meta["max_doc"] (ids are allocated past the
-            # committed maximum), so one shard-level predicate masks
-            # every uncommitted/ghost posting.  first_doc is a plain
-            # data column -> parquet row-group pruning makes it ~free.
-            # (Same guard on the catalog leg: a pending append's
-            # postings snapshot may be committed before its docs
-            # commit — identical ordering, identical mask.)
-            .where(F.col("first_doc") <= int(self.meta["max_doc"]))
-        )
-        # scoring/candidate paths never touch the positional payload;
-        # dropping the columns here keeps the parquet scan pruned to
-        # the positionless fields on a store_positions index (Lucene's
-        # .doc/.pos file separation, as a projection)
-        self._postings_scoring = self._postings.drop(
-            "pos_offsets", "pos_payload"
         )
         # serving-concurrency gate for the driver-LOCAL fast path: the
         # local path decodes postings in THIS process, so two client
@@ -453,153 +263,12 @@ class QueryEngine:
         # the latest ``shared`` table _apply_per_range broadcast (see
         # there); None until a distributed batch call runs
         self._shared_bc = None
-        # selective serving cache (cache_postings): pinned hot frame +
-        # driver-side hot term set; None until the caller opts in
-        self._postings_hot: DataFrame | None = None
-        self._hot_terms: frozenset | None = None
-        # r08 driver-tier hot postings: term -> list of shard-row dicts
-        # (the scoring projection, a _ShardRows view over per-file rows
-        # shared across engines), populated by cache_postings(None)
-        # when the whole payload fits DRIVER_POSTINGS_CACHE_MAX_BYTES.
-        # The driver-local fast path then scores straight from these
-        # rows — ZERO Spark jobs per warm query instead of one pruned
-        # collect per query (the ES search-tier in-heap postings
-        # posture).  Rows are never mutated by scoring (shared safely).
-        self._driver_shards: _ShardRows | None = None
-        # driver-tier docs metadata beside the shard rows (see
-        # cache_postings and _driver_docs_tier): the doc_id-sorted
-        # HITS_COLUMNS minus score, or None while off.  _driver_docs_room
-        # is the budget the shard rows left for it, None once tried.
-        self._driver_docs: pd.DataFrame | None = None
-        self._driver_docs_room: int | None = None
-        self._hits_struct: T.StructType | None = None
-        # the typed empty answers, by with_docs (see _empty_hits)
-        self._empty: dict[bool, DataFrame] = {}
-        self._term_stats = self._dir("term_stats").reader
-        self._df_cache: dict | None = None
-        # explicit projection -> the tfs map column (kept for the
-        # postings build) is pruned out of every docs scan; range_bucket
-        # (the hive partition key, layout v3) rides along for DPP in
-        # _attach_docs.  Pre-v3 flat docs tables don't have the
-        # partition column — derive it (no pruning, same semantics) so
-        # the engine stays READ-compatible across layouts (the offline
-        # migrator upgrades writes; reads must not require it).
-        docs = self._dir("docs").reader
-        if "range_bucket" not in docs.columns:
-            span = self.cfg.range_size * self.cfg.ranges_per_batch
-            docs = docs.withColumn(
-                "range_bucket", (F.col("doc_id") / F.lit(span)).cast("int")
-            )
-        self._docs = docs.select(
-            "range_bucket", "doc_id", "conv_id", "doc_ts", "n_turns", "doc_len"
-        )
-        # unpruned frame (carries tfs) for the rare single-row readers
-        # (explain); every scan-heavy path uses the pruned _docs
-        self._docs_raw = docs
-        if max_driver_deletes is not None:
-            self.MAX_DRIVER_DELETES = max_driver_deletes
-        self._deletes_df: DataFrame | None = None
-        self._deletes = self._load_deletes()
-        # per-term df lookups resolved so far (LRU, negative results
-        # cached as 0) — the interactive path when the vocabulary is
-        # too large to preload; see _term_dfs
-        from collections import OrderedDict
-
-        self._term_lru: "OrderedDict[str, int]" = OrderedDict()
-        # resolved (ts window -> doc-id intervals) per segment layout
-        self._bounds_lru: dict = {}
-        # positional shard rows by term (see DRIVER_POS_CACHE_MAX_BYTES)
-        self._pos_rows_lru: "OrderedDict[str, tuple]" = OrderedDict()
-        self._pos_cache_bytes = 0
         self.last_query_stats: dict = {}
 
-    def _load_deletes(self):
-        """Tombstone handling, sized to the delete volume.
-
-        Small delete sets (<= MAX_DRIVER_DELETES) are collected once:
-        the array rides into the scoring closures and keeps the
-        driver-local interactive path available.  Large delete sets are
-        never collected past MAX_DRIVER_DELETES + 1 rows (one bounded
-        collect both sizes and fetches them): ``self._deletes`` stays
-        None and every scoring path cogroups the deletes DataFrame with
-        the postings on range_id — per-range delete bitmaps
-        co-partitioned with the shards, O(deletes-in-range) per task,
-        no driver OOM and no per-task broadcast of a global array."""
-        import numpy as np
-
-        if self.store.kind == "parquet":
-            from sotohp_spark.index.build import IndexBuilder
-
-            if not IndexBuilder(self.spark, self.path).has_deletes():
-                return np.zeros(0, dtype=np.int64)
-        elif not self.store.has_deletes():
-            return np.zeros(0, dtype=np.int64)
-        entry = self._dir("deletes")
-        df = self._deletes_df = entry.reader.select("doc_id")
-        # shared by the engines on this listing: (n, every id) from n
-        # rows, or (n, None) when there are at least n rows
-        n, arr = entry.value or (0, None)
-        if arr is None and n <= self.MAX_DRIVER_DELETES:
-            rows = df.limit(self.MAX_DRIVER_DELETES + 1).collect()
-            n = len(rows)
-            if n <= self.MAX_DRIVER_DELETES:
-                arr = np.unique(np.array(
-                    [r["doc_id"] for r in rows], dtype=np.int64))
-                arr.flags.writeable = False
-            entry.value = (n, arr)
-        if n > self.MAX_DRIVER_DELETES:
-            return None  # distributed-only: see _scored_ranges
-        return arr
-
-    def _dir(self, name: str) -> _DirState:
-        """The reader of index directory ``name`` (postings, docs,
-        term_stats or deletes) with its shared driver state.  On the
-        parquet leg the entry is shared with every live engine whose
-        listing of that directory has the same data files; the reader is
-        created (one schema-inference job) only when none does.  The
-        catalog leg opens its table reader on every engine."""
-        if self.store.kind != "parquet":
-            read = getattr(self.store, f"read_{name}")
-            entry = self._dirs[name] = _DirState(read(), None)
-            return entry
-        root = f"{self.path}/{name}"
-        files = _data_files(self.spark, root)
-        key = (self._app, root, files)
-        entry = _registered(key)
-        if entry is None:
-            # Spark's cache matches file relations by root path, not by
-            # the files listed, so a frame an engine cached over an older
-            # listing would serve a newer engine stale or deleted files;
-            # the reader carries its listing's digest to keep them apart
-            read = self.spark.read.option("basePath", root).option(
-                "sotohp.listing",
-                hashlib.sha1(repr(files).encode()).hexdigest(),
-            )
-            # Spark infers a directory's schema from one of its files, so
-            # a live listing that shares a file with this one already
-            # has it: reading with it skips the inference job
-            last = _registered((self._app, root))
-            if last is not None and not set(last.files).isdisjoint(files):
-                read = read.schema(last.reader.schema)
-            reader = read.parquet(root)
-            seen = {_rel_path(u, name) for u in reader.inputFiles()}
-            if seen == {f[0] for f in files}:
-                entry = _registered(key, _DirState(reader, files))
-                with _REUSE_LOCK:
-                    _REUSE[(self._app, root)] = entry
-            else:
-                entry = _DirState(reader, None)  # a writer moved files
-        self._dirs[name] = entry
-        return entry
-
-    def _deletes_by_range(self) -> DataFrame:
-        """Deletes keyed like the postings: range_id = doc_id // range_size."""
-        return self._deletes_df.select(
-            (F.col("doc_id") / F.lit(self.cfg.range_size))
-            .cast("int")
-            .alias("range_id"),
-            "doc_id",
-        )
+    @property
+    def meta(self) -> dict:
+        """The committed index meta this engine opened at."""
+        return self._snap.meta
 
     def _query_rules(self, source=None):
         """Per-source query tokenization (reference: rules are resolved
@@ -633,29 +302,33 @@ class QueryEngine:
         This is what keeps the interactive path viable when the
         vocabulary is too large to collect (tens of millions of
         distinct terms and up)."""
-        if self._df_cache is not None:
-            return {t: self._df_cache[t] for t in terms if t in self._df_cache}
+        snap = self._snap
+        if snap.df_cache is not None:
+            return {t: snap.df_cache[t] for t in terms if t in snap.df_cache}
+        lru = snap.memo.terms
         out: dict[str, int] = {}
         missing = []
-        for t in terms:
-            if t in self._term_lru:
-                self._term_lru.move_to_end(t)
-                out[t] = self._term_lru[t]
-            else:
-                missing.append(t)
+        with snap.memo.lock:
+            for t in terms:
+                if t in lru:
+                    lru.move_to_end(t)
+                    out[t] = lru[t]
+                else:
+                    missing.append(t)
         if missing:
             found = {
                 r["term"]: int(r["df"])
-                for r in self._term_stats.where(F.col("term").isin(missing))
+                for r in snap.term_stats.where(F.col("term").isin(missing))
                 .select("term", "df")
                 .collect()
             }
-            for t in missing:
-                v = found.get(t, 0)
-                self._term_lru[t] = v
-                out[t] = v
-            while len(self._term_lru) > self.TERM_LRU_MAX:
-                self._term_lru.popitem(last=False)
+            with snap.memo.lock:
+                for t in missing:
+                    v = found.get(t, 0)
+                    lru[t] = v
+                    out[t] = v
+                while len(lru) > self.TERM_LRU_MAX:
+                    lru.popitem(last=False)
         return {t: v for t, v in out.items() if v > 0}
 
     # ------------------------------------------------------------------
@@ -674,8 +347,7 @@ class QueryEngine:
         }
         return weights, sum(dfs.values())
 
-    def cache_postings(self, top_terms: int | None = None,
-                       include_positions: bool = False) -> int:
+    def cache_postings(self, top_terms: int | None = None) -> int:
         """Pin the postings hot set in executor memory (the serving-node
         posture; measured ~30% p95 cut at local scale).
 
@@ -694,10 +366,6 @@ class QueryEngine:
         split against the hot set and the cold scan's IN-list carries
         ONLY the cold terms, so parquet pushdown is never polluted by a
         NOT-IN over the hot list.
-
-        ``include_positions=True``: cache the full frame instead
-        (phrase-heavy serving); cached batches are columnar, so scoring
-        reads of the cached frame still skip the pos columns.
 
         Driver tiers (``top_terms=None`` only): when the whole scoring
         payload fits DRIVER_POSTINGS_CACHE_MAX_BYTES, the shard rows are
@@ -718,124 +386,15 @@ class QueryEngine:
         first distributed-leg read fills it; with it off, one count
         materializes it.
 
-        Returns the number of cached shard rows.  Re-invocation
-        releases the previous pin (both driver tiers included) first."""
-        if self._postings_hot is not None:
-            self._postings_hot.unpersist()
-        self._driver_shards = None
-        self._driver_docs = self._driver_docs_room = None
-        base = self._postings if include_positions else self._postings_scoring
-        if top_terms is None:
-            self._hot_terms = None
-            hot = base.cache()
-            if include_positions:
-                self._postings = hot
-                self._postings_scoring = hot.drop(
-                    "pos_offsets", "pos_payload"
-                )
-            else:
-                self._postings_scoring = hot
-            self._postings_hot = hot
-            # driver tier (r08): when the ENTIRE scoring payload fits
-            # the driver budget, also pin the shard rows in driver
-            # memory — the local fast path then runs with zero Spark
-            # jobs per query.  Scale-adaptive: past the budget (any
-            # big corpus) this silently stays off, one count
-            # materializes the executor cache, and the per-query
-            # pruned collect path is unchanged; the selective
-            # (top_terms=N) posture never builds it.
-            scoring_view = hot
-            if "pos_offsets" in scoring_view.columns:
-                scoring_view = scoring_view.drop(
-                    "pos_offsets", "pos_payload"
-                )
-            tier = self._pin_shard_rows(scoring_view)
-            if tier is None:
-                n = scoring_view.count()
-            else:
-                self._driver_shards, payload = tier
-                n = tier[0].count()
-                self._driver_docs_room = (
-                    self.DRIVER_POSTINGS_CACHE_MAX_BYTES - payload
-                )
-            # pin the docs METADATA projection too (doc_id, conv_id,
-            # doc_ts, n_turns, doc_len — never text/tfs): every
-            # sort/collapse/agg surface joins it per query.  Bounded
-            # by committed doc count — a big corpus keeps the pruned
-            # parquet scan (row width ~40 B, so 10M docs ~ 400 MB of
-            # executor storage).
-            if int(self.meta["n_docs"]) <= 10_000_000:
-                self._docs = self._docs.cache()
-            return n
-        hot_list = [
-            r["term"]
-            for r in self._term_stats
-            .orderBy(F.col("df").desc(), F.col("term"))
-            .limit(int(top_terms))
-            .select("term")
-            .collect()
-        ]
-        self._hot_terms = frozenset(hot_list)
-        hot = base.where(F.col("term").isin(hot_list)).cache()
-        self._postings_hot = hot
-        return hot.count()
-
-    def _pin_shard_rows(self, scoring_view: DataFrame):
-        """(shard rows, payload bytes) of the driver shard tier, or None
-        when the scoring payload exceeds DRIVER_POSTINGS_CACHE_MAX_BYTES.
-
-        The rows of a postings file some live engine already holds are
-        reused; only the other files are probed for their payload and,
-        when the total fits, collected once with each row tagged by its
-        source file.  The view masks rows past this engine's committed
-        max_doc, so a file moved in by a pending append is held but
-        never served before the docs commit.  Without a shareable
-        listing (the catalog leg, or a writer raced the open) the
-        guarded ``scoring_view`` is probed and collected whole."""
-        budget = self.DRIVER_POSTINGS_CACHE_MAX_BYTES
-        postings = self._dirs["postings"]
-
-        def payload_of(df: DataFrame) -> int:
-            return df.agg(
-                F.coalesce(F.sum(F.length("payload")), F.lit(0))
-            ).collect()[0][0]
-
-        if postings.files is None:
-            if payload_of(scoring_view) > budget:
-                return None
-            rows = [_FileRows([r.asDict() for r in scoring_view.collect()])]
-        else:
-            root = f"{self.path}/postings"
-            held = {
-                f: _registered((self._app, root, *f)) for f in postings.files
-            }
-            missing = [f for f, e in held.items() if e is None]
-            payload = sum(e.payload for e in held.values() if e is not None)
-            if payload > budget:
-                return None
-            if missing:
-                new = postings.reader if len(missing) == len(held) else (
-                    self.spark.read.schema(postings.reader.schema)
-                    .option("basePath", root)
-                    .parquet(*[f"{root}/{f[0]}" for f in missing])
-                )
-                new = new.drop("pos_offsets", "pos_payload")
-                if payload + payload_of(new) > budget:
-                    return None
-                by_file: dict[str, list] = {f[0]: [] for f in missing}
-                tagged = new.withColumn("_file", F.input_file_name())
-                for r in tagged.collect():
-                    d = r.asDict()
-                    by_file[_rel_path(d.pop("_file"), "postings")].append(d)
-                for f in missing:
-                    held[f] = _registered(
-                        (self._app, root, *f), _FileRows(by_file[f[0]])
-                    )
-            rows = [held[f] for f in postings.files]
-        return (
-            _ShardRows(rows, int(self.meta["max_doc"])),
-            sum(f.payload for f in rows),
+        Publishes the pinned snapshot with one assignment: a query in
+        flight finishes on the one it started with; the term, window
+        and positional memos pass on.  Returns the number of cached
+        shard rows.  Re-invocation releases the previous pin first."""
+        self._snap, n = reader.pin(
+            self._snap, self.spark, self.path, top_terms,
+            self.DRIVER_POSTINGS_CACHE_MAX_BYTES,
         )
+        return n
 
     def _scoring_shards(self, terms) -> DataFrame:
         """Postings shards for ``terms`` (positionless projection),
@@ -843,20 +402,18 @@ class QueryEngine:
         terms read the InMemoryRelation, cold terms read parquet with
         an IN-list of only the cold terms (full pushdown).  One plan,
         one job — the union lives inside the same action."""
+        snap = self._snap
         terms = sorted(terms)
-        if self._hot_terms is None:
-            return self._postings_scoring.where(F.col("term").isin(terms))
-        hot = [t for t in terms if t in self._hot_terms]
-        cold = [t for t in terms if t not in self._hot_terms]
-        hot_view = self._postings_hot
-        if "pos_offsets" in hot_view.columns:
-            hot_view = hot_view.drop("pos_offsets", "pos_payload")
+        if snap.hot_terms is None:
+            return snap.postings_scoring.where(F.col("term").isin(terms))
+        hot = [t for t in terms if t in snap.hot_terms]
+        cold = [t for t in terms if t not in snap.hot_terms]
         parts = []
         if hot:
-            parts.append(hot_view.where(F.col("term").isin(hot)))
+            parts.append(snap.postings_hot.where(F.col("term").isin(hot)))
         if cold:
             parts.append(
-                self._postings_scoring.where(F.col("term").isin(cold))
+                snap.postings_scoring.where(F.col("term").isin(cold))
             )
         out = parts[0]
         for p in parts[1:]:
@@ -867,15 +424,9 @@ class QueryEngine:
         """Pull term->df to the driver (the search head's dictionary
         cache).  Vocabulary is O(distinct terms) — fine up to tens of
         millions; beyond that leave it off and pay one pruned parquet
-        lookup per query."""
-        entry = self._dirs["term_stats"]
-        if entry.value is None:
-            entry.value = {
-                r["term"]: int(r["df"])
-                for r in self._term_stats.select("term", "df").collect()
-            }
-        self._df_cache = entry.value
-        return len(self._df_cache)
+        lookup per query.  Publishes a new snapshot carrying it."""
+        self._snap = snap = reader.preload(self._snap)
+        return len(snap.df_cache)
 
     def _coerce_ts(self, v):
         """Normalize a window bound to a NAIVE session-local datetime —
@@ -919,24 +470,28 @@ class QueryEngine:
 
         Resolved windows are memoized per segment layout (r08): the
         (window -> id-interval) answer is index METADATA — like the
-        _term_lru dictionary cache — so a repeated window (dashboards
+        term df memo — so a repeated window (dashboards
         re-issuing the same month) skips the partial-segment scan.
         The key carries max_doc + segment count, so any append (which
         changes both) naturally misses; tombstones never change id
         intervals."""
+        snap = self._snap
+        meta = snap.meta
         w_lo, w_hi = self._coerce_ts(ts_min), self._coerce_ts(ts_max)
         lru_key = (
-            str(w_lo), str(w_hi), int(self.meta["max_doc"]),
-            len(self.meta.get("segments") or []),
+            str(w_lo), str(w_hi), int(meta["max_doc"]),
+            len(meta.get("segments") or []),
         )
-        cached = self._bounds_lru.get(lru_key)
+        memo = snap.memo
+        with memo.lock:
+            cached = memo.bounds.get(lru_key)
         if cached is not None:
             return list(cached) if cached else None
         segs = [
             (int(lo), int(hi))
-            for lo, hi in self.meta.get("segments") or [[0, self.meta["max_doc"]]]
+            for lo, hi in meta.get("segments") or [[0, meta["max_doc"]]]
         ]
-        seg_ts = self.meta.get("segment_ts") or []
+        seg_ts = meta.get("segment_ts") or []
         full, partial = [], []
         for idx, (lo, hi) in enumerate(segs):
             b = seg_ts[idx] if idx < len(seg_ts) else None
@@ -955,7 +510,7 @@ class QueryEngine:
 
         ivs = list(full)
         if partial:
-            d = self._docs
+            d = snap.docs
             span = self.cfg.range_size * self.cfg.ranges_per_batch
             # same IN-list cap as _prune_shards_to_bounds: a segment
             # spanning millions of buckets must not materialize them
@@ -1007,9 +562,10 @@ class QueryEngine:
                 )
                 ivs.extend((int(r["lo"]), int(r["hi"])) for r in rows)
         out = sorted(ivs)
-        self._bounds_lru[lru_key] = out  # [] memoizes the empty window
-        while len(self._bounds_lru) > 256:
-            self._bounds_lru.pop(next(iter(self._bounds_lru)))
+        with memo.lock:
+            memo.bounds[lru_key] = out  # [] memoizes the empty window
+            while len(memo.bounds) > 256:
+                memo.bounds.pop(next(iter(memo.bounds)))
         return out or None
 
     # cap on the explicit bucket IN-list for partition pruning; above
@@ -2226,46 +1782,46 @@ class QueryEngine:
         )
         return shards.join(F.broadcast(ok), "range_id")
 
-    def _positional_rows(self, terms) -> list:
-        """FULL-column shard rows (positions included) for ``terms``,
-        through the per-term driver LRU: only terms not yet resident
-        cost a pruned collect, so a session's phrase working set pays
-        the parquet read once (the engine is a snapshot-at-open — the
-        postings frame this reads is immutable for this instance, so
-        residency can never go stale within it).  Eviction is
-        byte-budgeted, oldest term first, never a term of the current
-        query."""
-        cache = self._pos_rows_lru
-        missing = [t for t in terms if t not in cache]
+    def _positional_rows(self, snap, terms) -> list:
+        """FULL-column shard rows (positions included) for ``terms`` of
+        ``snap``'s postings, through the per-term driver LRU: only terms
+        not yet resident cost a pruned collect, so a session's phrase
+        working set pays the parquet read once (the postings frame this
+        reads is immutable for the snapshot's listing, so residency can
+        never go stale within it).  Eviction is byte-budgeted, oldest
+        term first, never a term of the current query."""
+        cache = snap.memo.pos_rows
+        with snap.memo.lock:
+            got = {t: cache[t] for t in terms if t in cache}
+        missing = [t for t in terms if t not in got]
         if missing:
             by_t: dict[str, list] = {t: [] for t in missing}
-            for r in self._postings.where(
+            for r in snap.postings.where(
                 F.col("term").isin(missing)
             ).collect():
                 d = r.asDict()
                 by_t[d["term"]].append(d)
             for t in missing:
                 rs = by_t[t]
-                nb = sum(
+                got[t] = (sum(
                     len(x["payload"] or b"")
                     + len(x.get("pos_payload") or b"")
                     for x in rs
-                )
-                cache[t] = (nb, rs)
-                self._pos_cache_bytes += nb
-        current = set(terms)
-        for t in terms:
-            cache.move_to_end(t)
-        while (
-            self._pos_cache_bytes > self.DRIVER_POS_CACHE_MAX_BYTES
-            and len(cache) > len(current)
-        ):
-            t0 = next(iter(cache))
-            if t0 in current:
-                break
-            nb0, _ = cache.pop(t0)
-            self._pos_cache_bytes -= nb0
-        return [r for t in terms for r in cache[t][1]]
+                ), rs)
+        with snap.memo.lock:
+            cache.update(got)
+            for t in terms:
+                cache.move_to_end(t)
+            held = sum(nb for nb, _ in cache.values())
+            while (
+                held > self.DRIVER_POS_CACHE_MAX_BYTES
+                and len(cache) > len(got)
+            ):
+                t0 = next(iter(cache))
+                if t0 in got:
+                    break
+                held -= cache.pop(t0)[0]
+        return [r for t in terms for r in got[t][1]]
 
     def _apply_per_range(self, shards, kernel, schema,
                          n_candidates: int | None = None,
@@ -2337,21 +1893,22 @@ class QueryEngine:
         """
         import numpy as np
 
+        snap = self._snap
         if (
             n_candidates is not None
-            and self._deletes is not None
+            and snap.deletes is not None
             and n_candidates <= self.LOCAL_PATH_MAX_POSTINGS
             and self._local_gate.acquire(blocking=False)
         ):
             try:
-                if terms is not None and self._driver_shards is not None:
+                if terms is not None and snap.driver_shards is not None:
                     rows = [
                         s
                         for t in sorted(terms)
-                        for s in self._driver_shards.get(t, ())
+                        for s in snap.driver_shards.get(t, ())
                     ]
                 elif pos_terms is not None:
-                    rows = self._positional_rows(sorted(pos_terms))
+                    rows = self._positional_rows(snap, sorted(pos_terms))
                 else:
                     rows = [r.asDict() for r in shards().collect()]
                 by_range: dict[int, list] = {}
@@ -2360,7 +1917,7 @@ class QueryEngine:
                 parts = []
                 extra = () if shared is None else (shared,)
                 for rid in sorted(by_range):
-                    cols = kernel(by_range[rid], self._deletes, *extra)
+                    cols = kernel(by_range[rid], snap.deletes, *extra)
                     if len(next(iter(cols.values()))):
                         parts.append(cols)
                 if hits is not None:
@@ -2369,7 +1926,7 @@ class QueryEngine:
                         [c["score"] for c in parts], *hits,
                     )
                 if not parts:
-                    return self.spark.createDataFrame([], schema).limit(0)
+                    return snap.empty(schema)
                 return self.spark.createDataFrame(
                     pd.DataFrame({
                         name: np.concatenate([c[name] for c in parts])
@@ -2402,8 +1959,8 @@ class QueryEngine:
                 kernel(pdf.to_dict("records"), deletes, *extra)
             )
 
-        if self._deletes is not None:
-            deletes = self._deletes
+        if snap.deletes is not None:
+            deletes = snap.deletes
             out = shards.groupBy("range_id").applyInPandas(
                 lambda pdf: run(pdf, deletes), schema
             )
@@ -2418,8 +1975,13 @@ class QueryEngine:
             # prune the tombstone table to the CANDIDATE ranges before
             # the cogroup: without this, every query shuffles the full
             # deletes table and spawns a task per delete-only range
-            # with no shards
-            dels = self._deletes_by_range().join(
+            # with no shards; deletes are keyed like the postings:
+            # range_id = doc_id // range_size
+            dels = snap.deletes_df.select(
+                (F.col("doc_id") / F.lit(self.cfg.range_size))
+                .cast("int").alias("range_id"),
+                "doc_id",
+            ).join(
                 shards.select("range_id").distinct(), "range_id",
                 "left_semi",
             )
@@ -2470,8 +2032,8 @@ class QueryEngine:
                 all_terms.update(w)
         spark = self.spark
         if not per_query:
-            return spark.createDataFrame(
-                [], "query_id string, rank int, doc_id long, score double"
+            return self._snap.empty(
+                "query_id string, rank int, doc_id long, score double"
             )
 
         avgdl = self.meta["avgdl"]
@@ -2533,13 +2095,14 @@ class QueryEngine:
         job — and through the Spark join of _attach_docs otherwise."""
         import numpy as np
 
+        snap = self._snap
         docs = np.concatenate(all_docs) if all_docs else np.zeros(0, np.int64)
         if docs.size == 0:
             return self._empty_hits(with_docs)
         scores = np.concatenate(all_scores)
         sel = np.lexsort((docs, -scores))[:k]
         docs, scores = docs[sel].astype("int64"), scores[sel]
-        meta = self._driver_docs_tier() if with_docs else None
+        meta = self._driver_docs_tier(snap) if with_docs else None
         if meta is None:
             out = self.spark.createDataFrame(
                 pd.DataFrame({"doc_id": docs, "score": scores}),
@@ -2554,10 +2117,12 @@ class QueryEngine:
             return self._empty_hits(True)
         pdf = meta.iloc[pos[found]].reset_index(drop=True)
         pdf.insert(2, "score", scores[found])
-        return self.spark.createDataFrame(pdf, schema=self._hits_schema())
+        return self.spark.createDataFrame(pdf, schema=snap.hits_struct)
 
-    def _driver_docs_tier(self) -> pd.DataFrame | None:
-        """The driver-tier docs metadata, or None while it is off.
+    @staticmethod
+    def _driver_docs_tier(snap) -> pd.DataFrame | None:
+        """The driver-tier docs metadata of ``snap``'s pin, or None
+        while it is off.
 
         Filled once per pin by the first with_docs query on the local
         leg (callers hold _local_gate), so neither cache_postings nor a
@@ -2567,43 +2132,26 @@ class QueryEngine:
         because the tier is tried only when the shard rows fit.
         doc_ts travels as epoch microseconds and is held UTC-aware, so
         the frame round-trips it exactly under any session time zone."""
-        room, self._driver_docs_room = self._driver_docs_room, None
+        memo = snap.memo
+        room, memo.driver_docs_room = memo.driver_docs_room, None
         if room is not None:
-            pdf = self._docs.select(
+            pdf = snap.docs.select(
                 "doc_id", "conv_id", F.unix_micros("doc_ts").alias("doc_ts"),
                 "n_turns", "doc_len",
             ).toPandas()
             if pdf.memory_usage(index=False, deep=True).sum() <= room:
                 pdf["doc_ts"] = pd.to_datetime(pdf["doc_ts"], unit="us",
                                                utc=True)
-                self._driver_docs = pdf.sort_values(
+                memo.driver_docs = pdf.sort_values(
                     "doc_id", ignore_index=True
                 )
-        return self._driver_docs
-
-    def _hits_schema(self) -> T.StructType:
-        """The _attach_docs result schema: metadata fields as the docs
-        table types them, score as TOPK_SCHEMA does."""
-        if self._hits_struct is None:
-            fields = {f.name: f for f in self._docs.schema.fields}
-            fields["score"] = TOPK_SCHEMA["score"]
-            self._hits_struct = T.StructType(
-                [fields[c] for c in HITS_COLUMNS]
-            )
-        return self._hits_struct
+        return memo.driver_docs
 
     def _empty_hits(self, with_docs: bool) -> DataFrame:
         """A typed empty result — (doc_id, score), or the _attach_docs
-        schema with ``with_docs`` — without planning a join.  Built once
-        per schema and engine: a DataFrame is immutable, so every empty
-        answer can hand out the same one."""
-        empty = self._empty.get(with_docs)
-        if empty is None:
-            schema = self._hits_schema() if with_docs else TOPK_SCHEMA
-            empty = self._empty[with_docs] = self.spark.createDataFrame(
-                [], schema
-            ).limit(0)
-        return empty
+        schema with ``with_docs`` — without planning a join."""
+        snap = self._snap
+        return snap.empty(snap.hits_struct if with_docs else TOPK_SCHEMA)
 
     def _attach_docs(self, topk: DataFrame) -> DataFrame:
         """Join doc metadata onto a (tiny) top-k frame.
@@ -2617,7 +2165,7 @@ class QueryEngine:
         the hive partitions holding the k result docs are read."""
         keyed = self._bucket_keyed(topk)
         return (
-            self._docs.join(F.broadcast(keyed), ["range_bucket", "doc_id"])
+            self._snap.docs.join(F.broadcast(keyed), ["range_bucket", "doc_id"])
             .select(*HITS_COLUMNS)
             .orderBy(F.col("score").desc(), F.col("doc_id").asc())
         )
@@ -2652,7 +2200,7 @@ class QueryEngine:
         (tiny, driver-resident) meta; vocabulary and posting counts
         are ONE columnar aggregate over the term_stats dictionary —
         never the postings or the docs."""
-        dict_agg = self._term_stats.agg(
+        dict_agg = self._snap.term_stats.agg(
             F.count(F.lit(1)).alias("n_terms"),
             F.coalesce(
                 F.sum(F.col("df").cast("long")), F.lit(0)
@@ -2683,9 +2231,9 @@ class QueryEngine:
         merge/compaction, never per delete."""
         prefix = prefix.strip().lower()
         if not prefix:
-            return self.spark.createDataFrame([], "term string, df long").limit(0)
+            return self._snap.empty("term string, df long")
         return (
-            self._term_stats.where(F.col("term").startswith(prefix))
+            self._snap.term_stats.where(F.col("term").startswith(prefix))
             .select("term", F.col("df").cast("long").alias("df"))
             .orderBy(F.col("df").desc(), F.col("term").asc())
             .limit(k)
@@ -2709,7 +2257,7 @@ class QueryEngine:
         term = term.strip().lower()
         if not term or max_edits < 1:
             return []
-        cand = self._term_stats.where(
+        cand = self._snap.term_stats.where(
             F.length("term").between(
                 len(term) - max_edits, len(term) + max_edits
             )
@@ -2739,7 +2287,7 @@ class QueryEngine:
         from functools import reduce
         from operator import or_
 
-        dic = self._term_stats
+        dic = self._snap.term_stats
         if prefix_length > 0:
             dic = dic.where(
                 reduce(
@@ -2757,6 +2305,23 @@ class QueryEngine:
             for t in terms
         ]
         return dic.where(reduce(or_, conds)).select("term", "df")
+
+    def _live_corpus(self) -> DataFrame:
+        """The percolators' ``docs=None`` default: every live doc with
+        its tf map.  Valid (the oracle/backfill use), but a FOOT-GUN in
+        the alerting loop, so the corpus-scan choice is logged instead
+        of silently paid per call (VERDICT r6 cost nit #4).  ES parity:
+        tombstoned docs do not percolate."""
+        log.warning(
+            "percolate over the WHOLE corpus (docs=None) — the "
+            "alerting use passes the new batch only"
+        )
+        snap = self._snap
+        if snap.deletes_df is None:
+            return snap.docs_raw
+        return snap.docs_raw.join(
+            snap.deletes_df.select("doc_id"), "doc_id", "left_anti"
+        )
 
     def percolate(self, queries: list, docs: DataFrame | None = None,
                   source=None) -> DataFrame:
@@ -2786,28 +2351,12 @@ class QueryEngine:
             n_terms[qid] = len(terms)
             q_terms += [(str(qid), t) for t in terms]
         if not q_terms:
-            return self.spark.createDataFrame(
-                [], "doc_id long, query_id string"
-            )
+            return self._snap.empty("doc_id long, query_id string")
         qdf = self.spark.createDataFrame(
             q_terms, "query_id string, term string"
         )
         if docs is None:
-            # valid (the oracle/backfill use), but a FOOT-GUN in the
-            # alerting loop: surface the corpus-scan choice instead of
-            # silently paying it per call (VERDICT r6 cost nit #4)
-            log.warning(
-                "percolate over the WHOLE corpus (docs=None) — the "
-                "alerting use passes the new batch only"
-            )
-            docs = self._docs_raw
-            if self._deletes_df is not None:
-                # ES parity: tombstoned docs do not percolate (the
-                # corpus default must mean LIVE corpus)
-                docs = docs.join(
-                    self._deletes_df.select("doc_id"),
-                    "doc_id", "left_anti",
-                )
+            docs = self._live_corpus()
         hits = (
             docs.select("doc_id", F.explode(F.map_keys("tfs")).alias("term"))
             .join(F.broadcast(qdf), "term")
@@ -2901,21 +2450,7 @@ class QueryEngine:
             registry_path = f"{self.path}/percolator/{name}"
         qdf = self.spark.read.parquet(registry_path)
         if docs is None:
-            # valid (the oracle/backfill use), but a FOOT-GUN in the
-            # alerting loop: surface the corpus-scan choice instead of
-            # silently paying it per call (VERDICT r6 cost nit #4)
-            log.warning(
-                "percolate over the WHOLE corpus (docs=None) — the "
-                "alerting use passes the new batch only"
-            )
-            docs = self._docs_raw
-            if self._deletes_df is not None:
-                # ES parity: tombstoned docs do not percolate (the
-                # corpus default must mean LIVE corpus)
-                docs = docs.join(
-                    self._deletes_df.select("doc_id"),
-                    "doc_id", "left_anti",
-                )
+            docs = self._live_corpus()
         return (
             docs.select("doc_id", F.explode(F.map_keys("tfs")).alias("term"))
             .join(F.broadcast(qdf), "term")
@@ -2949,7 +2484,7 @@ class QueryEngine:
         empty = "source_term string, term string, distance int, " \
                 "df long, rank int"
         if not toks or max_edits < 1:
-            return self.spark.createDataFrame([], empty).limit(0)
+            return self._snap.empty(empty)
         src = self.spark.createDataFrame(
             [(t,) for t in toks], "source_term string"
         )
@@ -3068,7 +2603,7 @@ class QueryEngine:
         )
         if order not in ("df", "term"):
             raise ValueError(f"order must be 'df' or 'term', got {order!r}")
-        dic = self._term_stats
+        dic = self._snap.term_stats
         if prefix:
             dic = dic.where(F.col("term").startswith(prefix))
         sort_cols = (
@@ -3156,7 +2691,7 @@ class QueryEngine:
         if prefix and len(prefix) < len(pat) and pat[len(prefix)] in "*?+{|":
             prefix = prefix[:-1]
         rx = "^(?:" + pat + ")$"
-        dic = self._term_stats
+        dic = self._snap.term_stats
         if prefix:
             dic = dic.where(F.col("term").startswith(prefix))
         sort_cols = (
@@ -3228,15 +2763,15 @@ class QueryEngine:
         (range_bucket derived from the id like _attach_docs), and the
         breakdown explodes that single row's tf map filtered to the
         query terms — one tiny job, never a postings or corpus scan."""
+        snap = self._snap
+        schema = ("term string, qtf int, df long, idf double, "
+                  "tf long, score double")
         weights_terms = tokenize(query_text, self._query_rules(source))
         qtf: dict[str, int] = {}
         for t in weights_terms:
             qtf[t] = qtf.get(t, 0) + 1
         if not qtf:
-            return self.spark.createDataFrame(
-                [], "term string, qtf int, df long, idf double, "
-                    "tf long, score double"
-            )
+            return snap.empty(schema)
         dfs = self._term_dfs(sorted(qtf))
         n = self.meta["n_docs"]
         avgdl = float(self.meta["avgdl"])
@@ -3244,23 +2779,11 @@ class QueryEngine:
         from sotohp_spark.operators import bm25 as _bm25
 
         idf = {t: _bm25.lucene_idf_scalar(n, d) for t, d in dfs.items()}
-        span = self.cfg.range_size * self.cfg.ranges_per_batch
         # a TOMBSTONED doc explains to EMPTY (ES _explain reports a
-        # deleted doc unmatched; its stored row must not leak back) —
-        # same two-tier mask as term_vectors
-        if self._deletes is not None and int(doc_id) in self._deletes:
-            return self.spark.createDataFrame(
-                [], "term string, qtf int, df long, idf double, "
-                    "tf long, score double"
-            )
-        row = self._docs_raw.where(
-            (F.col("range_bucket") == int(doc_id) // span)
-            & (F.col("doc_id") == int(doc_id))
-        )
-        if self._deletes is None and self._deletes_df is not None:
-            row = row.join(
-                self._deletes_df.select("doc_id"), "doc_id", "left_anti"
-            )
+        # deleted doc unmatched)
+        row = self._live_doc_row(snap, doc_id)
+        if row is None:
+            return snap.empty(schema)
         qtf_m = F.create_map(
             *[x for t in dfs for x in (F.lit(t), F.lit(qtf[t]))]
         )
@@ -3346,7 +2869,7 @@ class QueryEngine:
         scored = self._scored_set(query_text, conjunctive, source)
         keyed = self._bucket_keyed(scored)
         best = (
-            self._docs.join(keyed, ["range_bucket", "doc_id"])
+            self._snap.docs.join(keyed, ["range_bucket", "doc_id"])
             .groupBy(key.alias("collapse_key"))
             .agg(
                 F.max_by(
@@ -3410,7 +2933,7 @@ class QueryEngine:
             F.lit(0.5), age_days / F.lit(float(half_life_days))
         )
         return (
-            self._docs.join(keyed, ["range_bucket", "doc_id"])
+            self._snap.docs.join(keyed, ["range_bucket", "doc_id"])
             .select(
                 "doc_id", "conv_id",
                 decayed.alias("score"), "doc_ts",
@@ -3452,9 +2975,9 @@ class QueryEngine:
             query_text, k=window_size, with_docs=False, source=source
         ).collect()
         if not wrows:
-            return self.spark.createDataFrame(
-                [], "doc_id long, score double, primary double, "
-                    "secondary double"
+            return self._snap.empty(
+                "doc_id long, score double, primary double, "
+                "secondary double"
             )
         wdf = self.spark.createDataFrame(
             [(int(r["doc_id"]), float(r["score"])) for r in wrows],
@@ -3485,6 +3008,26 @@ class QueryEngine:
             .limit(k)
         )
 
+    def _live_doc_row(self, snap, doc_id: int) -> DataFrame | None:
+        """The stored docs row of ``doc_id`` (tf map included) as ONE
+        partition-pruned lookup (range_bucket + doc_id pushdown), or
+        None when the driver tombstones hold it; with the tombstones
+        distributed, a doc-id-pruned anti join masks it instead.  A
+        tombstoned doc's stored row never leaks back out."""
+        if snap.deletes is not None and int(doc_id) in snap.deletes:
+            return None
+        span = self.cfg.range_size * self.cfg.ranges_per_batch
+        row = snap.docs_raw.where(
+            (F.col("range_bucket") == int(doc_id) // span)
+            & (F.col("doc_id") == int(doc_id))
+        )
+        if snap.deletes is None:
+            row = row.join(
+                snap.deletes_df.where(F.col("doc_id") == int(doc_id)),
+                "doc_id", "left_anti",
+            )
+        return row
+
     def term_vectors(self, doc_id: int) -> DataFrame:
         """ES ``_termvectors``: the stored term vector of ONE doc —
         every term it contains with its tf, corpus df, Lucene idf, and
@@ -3503,27 +3046,15 @@ class QueryEngine:
         merge, not per delete).  A TOMBSTONED doc returns an EMPTY
         frame (ES _termvectors reports a deleted doc as found=false;
         its stored row must not leak back out through this API)."""
+        snap = self._snap
         n = self.meta["n_docs"]
         avgdl = float(self.meta["avgdl"])
         k1, b = self.cfg.k1, self.cfg.b
-        span = self.cfg.range_size * self.cfg.ranges_per_batch
         schema = ("term string, tf long, df long, "
                   "idf double, weight double")
-        if self._deletes is not None:
-            if int(doc_id) in self._deletes:
-                return self.spark.createDataFrame([], schema).limit(0)
-        row = self._docs_raw.where(
-            (F.col("range_bucket") == int(doc_id) // span)
-            & (F.col("doc_id") == int(doc_id))
-        )
-        if self._deletes is None and self._deletes_df is not None:
-            # delete set too large for the driver: mask the one-row
-            # lookup with a doc-id-pruned anti join instead
-            row = row.join(
-                self._deletes_df.where(F.col("doc_id") == int(doc_id)),
-                "doc_id",
-                "left_anti",
-            )
+        row = self._live_doc_row(snap, doc_id)
+        if row is None:
+            return snap.empty(schema)
         doc = row.select("doc_len", F.explode("tfs").alias("term", "tf"))
         idf = F.log(
             1.0
@@ -3534,7 +3065,7 @@ class QueryEngine:
             / (F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
         )
         return (
-            self._term_stats.join(F.broadcast(doc), "term")
+            snap.term_stats.join(F.broadcast(doc), "term")
             .select(
                 "term",
                 F.col("tf").cast("long").alias("tf"),
@@ -3603,7 +3134,7 @@ class QueryEngine:
         )
         keyed = self._bucket_keyed(survivors)
         return (
-            self._docs.join(F.broadcast(keyed), ["range_bucket", "doc_id"])
+            self._snap.docs.join(F.broadcast(keyed), ["range_bucket", "doc_id"])
             .select("doc_id", "conv_id", "doc_ts")
             .orderBy(F.col("doc_ts").desc(), F.col("doc_id").asc())
             .limit(k)
@@ -3806,7 +3337,7 @@ class QueryEngine:
         ids = self._matched_ids(query_text, source)
         keyed = self._bucket_keyed(ids)
         return (
-            self._docs.join(keyed, ["range_bucket", "doc_id"])
+            self._snap.docs.join(keyed, ["range_bucket", "doc_id"])
             .groupBy(key.alias("facet"))
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
@@ -3863,7 +3394,7 @@ class QueryEngine:
             ).select(F.col("dl").cast("double").alias("m"))
         ids = self._matched_ids(query_text, source)
         keyed = self._bucket_keyed(ids)
-        return self._docs.join(keyed, ["range_bucket", "doc_id"]).select(
+        return self._snap.docs.join(keyed, ["range_bucket", "doc_id"]).select(
             F.col(field).cast("double").alias("m")
         )
 
@@ -3896,7 +3427,7 @@ class QueryEngine:
             F.col("score").desc(), F.col("doc_id").asc()
         )
         hits = (
-            self._docs.join(keyed, ["range_bucket", "doc_id"])
+            self._snap.docs.join(keyed, ["range_bucket", "doc_id"])
             .select(key.alias("bucket"), "doc_id", "conv_id", "score")
             .withColumn("hit_rank", F.row_number().over(w))
             .where(F.col("hit_rank") <= size)
@@ -4065,7 +3596,7 @@ class QueryEngine:
         keyed = self._bucket_keyed(ids)
         m = F.col(metric).cast("double")
         got = (
-            self._docs.join(keyed, ["range_bucket", "doc_id"])
+            self._snap.docs.join(keyed, ["range_bucket", "doc_id"])
             .groupBy(expr.alias("bucket"))
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),
@@ -4152,7 +3683,7 @@ class QueryEngine:
         ids = self._matched_ids(query_text, source)
         keyed = self._bucket_keyed(ids)
         grouped = (
-            self._docs.join(keyed, ["range_bucket", "doc_id"])
+            self._snap.docs.join(keyed, ["range_bucket", "doc_id"])
             .groupBy(*keys)
             .agg(F.count(F.lit(1)).alias("n_docs"))
         )
@@ -4203,7 +3734,7 @@ class QueryEngine:
         ids = self._matched_ids(query_text, source)
         keyed = self._bucket_keyed(ids)
         hist = (
-            self._docs.join(keyed, ["range_bucket", "doc_id"])
+            self._snap.docs.join(keyed, ["range_bucket", "doc_id"])
             .groupBy(key.alias("bucket"))
             .agg(F.count(F.lit(1)).alias("n_docs"))
         )
@@ -4300,7 +3831,7 @@ class QueryEngine:
         ids = self._matched_ids(query_text, source)
         keyed = self._bucket_keyed(ids)
         hist = (
-            self._docs.join(keyed, ["range_bucket", "doc_id"])
+            self._snap.docs.join(keyed, ["range_bucket", "doc_id"])
             .groupBy(key.alias("bucket"))
             .agg(F.count(F.lit(1)).alias("n_docs"))
         )
@@ -4330,6 +3861,7 @@ class QueryEngine:
         max_doc_count first (a rare-terms dictionary is tiny by
         definition, so the join broadcasts); ES itself uses a CuckooFilter
         approximation here — this is exact."""
+        snap = self._snap
         if max_doc_count < 1:
             raise ValueError(
                 f"max_doc_count must be >= 1, got {max_doc_count}"
@@ -4337,12 +3869,12 @@ class QueryEngine:
         ids = self._matched_ids(query_text, source)
         keyed = self._bucket_keyed(ids)
         fg = (
-            self._docs_raw.join(keyed, ["range_bucket", "doc_id"])
+            snap.docs_raw.join(keyed, ["range_bucket", "doc_id"])
             .select(F.explode(F.map_keys("tfs")).alias("term"))
             .groupBy("term")
             .agg(F.count(F.lit(1)).alias("fg_count"))
         )
-        rare_dict = self._term_stats.where(
+        rare_dict = snap.term_stats.where(
             F.col("df") <= int(max_doc_count)
         ).select("term", F.col("df").cast("long").alias("bg_count"))
         return (
@@ -4425,11 +3957,12 @@ class QueryEngine:
         deterministically once the k-row result materializes (repeated
         calls must not accumulate executor storage for the session
         lifetime)."""
+        snap = self._snap
         ids = self._matched_ids(query_text, source).persist()
         try:
             keyed = self._bucket_keyed(ids)
             fg = (
-                self._docs_raw.join(keyed, ["range_bucket", "doc_id"])
+                snap.docs_raw.join(keyed, ["range_bucket", "doc_id"])
                 .select(F.explode(F.map_keys("tfs")).alias("term"))
                 .groupBy("term")
                 .agg(F.count(F.lit(1)).alias("fg_count"))
@@ -4443,7 +3976,7 @@ class QueryEngine:
             out = (
                 fg.crossJoin(F.broadcast(n_m))
                 .join(
-                    self._term_stats.select(
+                    snap.term_stats.select(
                         "term", F.col("df").cast("long").alias("bg_count")
                     ),
                     "term",
@@ -4493,7 +4026,7 @@ class QueryEngine:
                              "(expected day | week | month)")
         ids = self._matched_ids(query_text, source)
         keyed = self._bucket_keyed(ids)
-        joined = self._docs.join(keyed, ["range_bucket", "doc_id"])
+        joined = self._snap.docs.join(keyed, ["range_bucket", "doc_id"])
         agg = (
             F.approx_count_distinct(key, rsd) if approx
             else F.countDistinct(key)
@@ -4514,26 +4047,11 @@ class QueryEngine:
         map (bounded by doc length) + max_terms LRU df lookups — cost
         is independent of corpus size; the retrieval is the standard
         top_k plan."""
-        span = self.cfg.range_size * self.cfg.ranges_per_batch
-        rb = int(doc_id) // span
-        if self.store.kind == "parquet":
-            docs_full = self.spark.read.option(
-                "basePath", f"{self.path}/docs"
-            ).parquet(f"{self.path}/docs")
-        else:
-            docs_full = self.store.read_docs()
-        where = (F.col("doc_id") == int(doc_id))
-        if "range_bucket" in docs_full.columns:
-            where = (F.col("range_bucket") == rb) & where
         # ES: a deleted `like` doc is NOT FOUND — its stored tf map
-        # must not seed the query (two-tier mask like term_vectors)
-        if self._deletes is not None and int(doc_id) in self._deletes:
+        # must not seed the query
+        lookup = self._live_doc_row(self._snap, doc_id)
+        if lookup is None:
             raise ValueError(f"doc_id {doc_id} is deleted")
-        lookup = docs_full.where(where)
-        if self._deletes is None and self._deletes_df is not None:
-            lookup = lookup.join(
-                self._deletes_df.select("doc_id"), "doc_id", "left_anti"
-            )
         row = lookup.select("tfs").collect()
         if not row:
             raise ValueError(f"doc_id {doc_id} not in the docs table")
@@ -4550,7 +4068,7 @@ class QueryEngine:
             key=lambda x: (-x[0], x[1]),
         )[:max_terms]
         if not ranked:
-            return self.spark.createDataFrame([], TOPK_SCHEMA).limit(0)
+            return snap.empty(TOPK_SCHEMA)
         out = self._top_k_terms([t for _, t in ranked], k + 1, False)
         return (
             out.where(F.col("doc_id") != int(doc_id))
@@ -4590,16 +4108,14 @@ class QueryEngine:
         from sotohp_spark.operators.postings import conjunctive_match
 
         terms = sorted(set(tokenize(query_text, self._query_rules(source))))
-        spark = self.spark
         schema = "doc_id long, dl long" if with_dl else "doc_id long"
-        empty = spark.createDataFrame([], schema).limit(0)
         if not terms:
-            return empty
+            return self._snap.empty(schema)
         dfs = self._term_dfs(terms)
         if any(dfs.get(t, 0) == 0 for t in terms):
             # reference AND semantics: a term absent from the corpus
             # empties the result (MediaServiceLive.scala:108-112)
-            return empty
+            return self._snap.empty(schema)
         n_terms = len(terms)
 
         def match_rows(rows: list, deletes) -> dict:
@@ -4655,7 +4171,7 @@ class QueryEngine:
             all_terms.update(terms)
             term_df.update(dfs)
         if not phrase_terms:
-            return self.spark.createDataFrame([], schema).limit(0)
+            return self._snap.empty(schema)
 
         def match_rows(rows: list, deletes, queries: dict) -> dict:
             pairs = conjunctive_match_batch(rows, queries, deletes)
@@ -4703,6 +4219,7 @@ class QueryEngine:
         """
         from sotohp_spark.operators.postings import positional_phrase_match
 
+        snap = self._snap
         if not self.meta.get("positions"):
             raise ValueError(
                 "phrase_match_doc_ids needs a positional index — "
@@ -4710,14 +4227,13 @@ class QueryEngine:
                 "use phrase_search's text-verify mode"
             )
         schema = "doc_id long"
-        empty = self.spark.createDataFrame([], schema).limit(0)
         offs = self._phrase_offsets(phrase, source)
         if not offs:
-            return empty
+            return snap.empty(schema)
         terms = sorted({t for t, _ in offs})
         dfs = self._term_dfs(terms)
         if any(dfs.get(t, 0) == 0 for t in terms):
-            return empty
+            return snap.empty(schema)
         n_terms = len(terms)
 
         def match_rows(rows: list, deletes) -> dict:
@@ -4728,7 +4244,7 @@ class QueryEngine:
         # FULL postings columns (pos_offsets/pos_payload included) —
         # the one query path that reads the positional stream
         return self._apply_per_range(
-            lambda: self._postings.where(F.col("term").isin(terms)),
+            lambda: snap.postings.where(F.col("term").isin(terms)),
             match_rows, schema, n_candidates=sum(dfs.values()),
             pos_terms=terms, prefilter=(n_terms,) if n_terms > 1 else None,
         )
@@ -4755,6 +4271,7 @@ class QueryEngine:
         EngineConfig(store_positions=True)."""
         from sotohp_spark.operators.postings import span_near_match
 
+        snap = self._snap
         if not self.meta.get("positions"):
             raise ValueError(
                 "span_near_doc_ids needs a positional index — build "
@@ -4763,10 +4280,9 @@ class QueryEngine:
         if slop < 0:
             raise ValueError("slop must be >= 0")
         schema = "doc_id long"
-        empty = self.spark.createDataFrame([], schema).limit(0)
         terms = tokenize(query_text, self._query_rules(source))
         if not terms:
-            return empty
+            return snap.empty(schema)
         if len(set(terms)) != len(terms):
             raise ValueError(
                 f"span clauses must be distinct terms, got {terms}"
@@ -4784,7 +4300,7 @@ class QueryEngine:
             )
         dfs = self._term_dfs(sorted(terms))
         if any(dfs.get(t, 0) == 0 for t in terms):
-            return empty
+            return snap.empty(schema)
         n_terms = len(terms)
 
         def match_rows(rows: list, deletes) -> dict:
@@ -4795,7 +4311,7 @@ class QueryEngine:
             )}
 
         return self._apply_per_range(
-            lambda: self._postings.where(F.col("term").isin(terms)),
+            lambda: snap.postings.where(F.col("term").isin(terms)),
             match_rows, schema, n_candidates=sum(dfs.values()),
             pos_terms=terms, prefilter=(n_terms,) if n_terms > 1 else None,
         )
@@ -4820,14 +4336,13 @@ class QueryEngine:
         exactly the amortization a 50-way completion fan-out needs).
         Requires EngineConfig(store_positions=True)."""
         schema = "doc_id long"
-        empty = self.spark.createDataFrame([], schema).limit(0)
         terms = tokenize(phrase, self._query_rules(source))
         if not terms:
-            return empty
+            return self._snap.empty(schema)
         head, last = terms[:-1], terms[-1]
         exps = self.wildcard_expand(last + "*", max_expansions, order="term")
         if not exps:
-            return empty
+            return self._snap.empty(schema)
         phrases = [
             (f"mpp{i}", " ".join(head + [t])) for i, (t, _) in enumerate(exps)
         ]
@@ -4847,6 +4362,7 @@ class QueryEngine:
             positional_phrase_match_batch,
         )
 
+        snap = self._snap
         if not self.meta.get("positions"):
             raise ValueError(
                 "phrase_match_doc_ids_batch needs a positional index — "
@@ -4868,7 +4384,7 @@ class QueryEngine:
             all_terms.update(terms)
             term_df.update(dfs)
         if not offsets_map:
-            return self.spark.createDataFrame([], schema).limit(0)
+            return snap.empty(schema)
 
         def match_rows(rows: list, deletes, offsets: dict) -> dict:
             pairs = positional_phrase_match_batch(rows, offsets, deletes)
@@ -4877,7 +4393,7 @@ class QueryEngine:
 
         terms = sorted(all_terms)
         return self._apply_per_range(
-            lambda: self._postings.where(F.col("term").isin(terms)),
+            lambda: snap.postings.where(F.col("term").isin(terms)),
             match_rows, schema, n_candidates=sum(term_df.values()),
             pos_terms=terms, shared=offsets_map,
         )
@@ -5077,16 +4593,16 @@ class QueryEngine:
 
         from sotohp_spark.operators.postings import phrase_match_scored
 
+        snap = self._snap
         self._require_texts(texts, "phrase_ranked", optional=True)
         schema = "doc_id long, score double"
-        empty = self.spark.createDataFrame([], schema).limit(0)
         pat = r"(^|\s)" + re.escape(phrase.strip()) + r"(\s|$)"
         offs = self._phrase_offsets(phrase, source)
         if not phrase.strip():
-            scored = empty
+            scored = snap.empty(schema)
         elif not offs:
             if texts is None:
-                scored = empty
+                scored = snap.empty(schema)
             else:
                 scored = (
                     texts.where(F.col(text_col).rlike(pat))
@@ -5104,7 +4620,7 @@ class QueryEngine:
             terms = sorted({t for t, _ in offs})
             dfs = self._term_dfs(terms)
             if any(dfs.get(t, 0) == 0 for t in terms):
-                scored = empty
+                scored = snap.empty(schema)
             else:
                 weights, _ = self.query_weights(phrase, source)
                 avgdl = self.meta["avgdl"]
@@ -5120,7 +4636,7 @@ class QueryEngine:
                     return {"doc_id": docs, "score": scores}
 
                 scored = self._apply_per_range(
-                    lambda: self._postings.where(F.col("term").isin(terms)),
+                    lambda: snap.postings.where(F.col("term").isin(terms)),
                     score_rows, schema, n_candidates=sum(dfs.values()),
                     pos_terms=terms,
                     prefilter=(n_terms,) if n_terms > 1 else None,

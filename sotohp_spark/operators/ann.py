@@ -889,38 +889,3 @@ def embedding_neardup_ivf(
         .groupBy("id_a", "id_b")
         .agg(F.max("cos_sim").alias("cos_sim"))
     )
-
-
-def embedding_neardup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    bits: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine >= threshold, LSH-
-    bucketed self-join (same-bucket candidates only; near-dups at
-    0.95+ collide with high probability at 6 bits)."""
-    first = embeddings.select(vec_col).first()
-    dim = len(first[vec_col])
-    planes = _hyperplanes(dim, bits, seed)
-    wb = embeddings.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).alias("vec"),
-        srp_bucket_col(F.col(vec_col), planes).alias("bucket"),
-    )
-    a, b = wb.alias("a"), wb.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vid") < F.col("b.vid")),
-        )
-        .select(
-            F.col("a.vid").alias("id_a"),
-            F.col("b.vid").alias("id_b"),
-            F.round(cosine_sim(F.col("a.vec"), F.col("b.vec")), 6).alias("cos_sim"),
-        )
-        .where(F.col("cos_sim") >= threshold)
-    )

@@ -28,7 +28,7 @@ def engine(spark, tmp_path_factory):
 
 def _meta(engine):
     return {
-        r.doc_id: r for r in engine._docs.select(
+        r.doc_id: r for r in engine._snap.docs.select(
             "doc_id", "conv_id", "doc_ts", "doc_len", "n_turns"
         ).collect()
     }
@@ -186,7 +186,7 @@ def test_derivative_matches_brute(engine):
 def test_rare_terms_matches_brute(engine):
     meta_docs = {
         r.doc_id: set(r.tfs.keys())
-        for r in engine._docs_raw.select("doc_id", "tfs").collect()
+        for r in engine._snap.docs_raw.select("doc_id", "tfs").collect()
     }
     from collections import Counter
     bg = Counter(t for terms in meta_docs.values() for t in terms)

@@ -132,7 +132,7 @@ def test_iceberg_leg_lifecycle(spark, tmp_path):
     m2 = cb.compact()
     assert m2["n_docs"] == len(convs) - 1
     eng = QueryEngine(spark, store=store)
-    assert eng._docs.where(F.col("conv_id") == half[0]).count() == 0
+    assert eng._snap.docs.where(F.col("conv_id") == half[0]).count() == 0
     assert not store.has_deletes()
 
 
@@ -436,7 +436,7 @@ def test_catalog_compact_buckets_score_identity(spark, tmp_path, cat_turns):
     assert post == pre
     assert not store.has_deletes()
     eng = QueryEngine(spark, store=store)
-    assert eng._docs.where(F.col("conv_id").isin(convs[:3])).count() == 0
+    assert eng._snap.docs.where(F.col("conv_id").isin(convs[:3])).count() == 0
     for b, rows in before_rows.items():
         got = sorted(
             (r["doc_id"], r["doc_len"])

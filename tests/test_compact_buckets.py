@@ -51,7 +51,7 @@ def _build_with_bucket0_deletes(spark, path):
     # doom 3 conversations whose doc ids live in bucket 0 only
     doomed_convs = [
         r["conv_id"]
-        for r in engine._docs.where(F.col("doc_id") < 6)
+        for r in engine._snap.docs.where(F.col("doc_id") < 6)
         .select("conv_id").distinct().collect()
     ]
     delete_conversations(spark, path, doomed_convs)
@@ -74,7 +74,7 @@ def test_bucket_compact_score_identity_and_locality(spark, tmp_path):
 
     # (a) rank AND score identity vs the tombstone-filtered index
     eng = QueryEngine(spark, path)
-    assert eng._deletes is not None and eng._deletes.size == 0  # no tombstones left
+    assert eng._snap.deletes is not None and eng._snap.deletes.size == 0  # no tombstones left
     for qt in QUERIES:
         got = eng.top_k_pdf(qt, 15)
         assert list(got["doc_id"]) == list(before[qt]["doc_id"]), qt

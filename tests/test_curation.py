@@ -170,7 +170,7 @@ def test_conjunctive_match_skips_hot_blocks(spark, phrase_index):
     hot = stats_pdf.iloc[0]["term"]
     sel = stats_pdf[stats_pdf["df"] <= 3].iloc[0]["term"]
     rows = (
-        engine._postings.where(F.col("term").isin([hot, sel]))
+        engine._snap.postings.where(F.col("term").isin([hot, sel]))
         .toPandas()
         .to_dict("records")
     )

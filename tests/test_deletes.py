@@ -73,8 +73,8 @@ def test_large_delete_sets_stay_distributed(spark, tmp_path):
 
     cached = QueryEngine(spark, path)                      # collected array
     dist = QueryEngine(spark, path, max_driver_deletes=0)  # forced cogroup
-    assert cached._deletes is not None and cached._deletes.size == 5
-    assert dist._deletes is None  # nothing ever collected to the driver
+    assert cached._snap.deletes is not None and cached._snap.deletes.size == 5
+    assert dist._snap.deletes is None  # nothing ever collected to the driver
 
     for qt in ["error retry", "search query", "timeout"]:
         for conj in (False, True):
@@ -120,7 +120,7 @@ def test_tombstone_layout_backward_compatible(spark, tmp_path):
     delete_conversations(spark, path, victims)
 
     engine = QueryEngine(spark, path)
-    assert engine._deletes.size == 2  # both formats read together
+    assert engine._snap.deletes.size == 2  # both formats read together
     assert 0 not in set(engine.top_k_pdf("error", 50)["doc_id"])
 
 
@@ -147,7 +147,7 @@ def test_tombstone_hive_layout_normalized(spark, tmp_path):
         d.startswith("range_bucket=") for d in os.listdir(f"{path}/deletes")
     )
     engine = QueryEngine(spark, path)
-    assert engine._deletes.size == 2
+    assert engine._snap.deletes.size == 2
     assert 0 not in set(engine.top_k_pdf("error", 50)["doc_id"])
 
 
@@ -223,4 +223,4 @@ def test_delete_then_compact(spark, tmp_path):
         rtol=0,
     )
     # tombstones cleared by the swap
-    assert engine._deletes.size == 0
+    assert engine._snap.deletes.size == 0

@@ -218,7 +218,7 @@ def test_merge_segments_with_tombstones_also_compacts(spark, tmp_path):
     assert list(before["doc_id"]) == list(after["doc_id"])
     assert np.allclose(before["score"], after["score"], rtol=0, atol=0)
     # tombstoned docs physically gone, tombstone table cleared
-    assert eng2._docs.where(
+    assert eng2._snap.docs.where(
         F.col("conv_id") == doomed_conv
     ).count() == 0
     import os

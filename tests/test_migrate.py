@@ -94,7 +94,7 @@ def test_migrate_carries_tombstones(spark, tmp_path):
     b.build(transcripts_df(spark, 0.03).localCheckpoint(), input_fingerprint="d")
     engine = QueryEngine(spark, src)
     victim_doc = int(engine.top_k_pdf("error", 1)["doc_id"].iloc[0])
-    victim = engine._docs.where(F.col("doc_id") == victim_doc).collect()[0][
+    victim = engine._snap.docs.where(F.col("doc_id") == victim_doc).collect()[0][
         "conv_id"
     ]
     delete_conversations(spark, src, [victim])

@@ -40,12 +40,12 @@ def engine(_engine):
 
 
 def test_postings_scan_pushes_term_filter(engine):
-    df = engine._postings.where(F.col("term").isin(["error", "retry"]))
+    df = engine._snap.postings.where(F.col("term").isin(["error", "retry"]))
     assert_pushed_filter(df, "In(term")
 
 
 def test_docs_scan_prunes_tf_maps(engine):
-    assert_column_pruned(engine._docs, "tfs")
+    assert_column_pruned(engine._snap.docs, "tfs")
 
 
 def test_topk_plan_no_row_python_no_cartesian(engine):

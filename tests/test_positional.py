@@ -263,7 +263,7 @@ def test_append_preserves_positions(spark, pos_index):
     append_conversations(spark, path, new, cfg_n)
     engine = QueryEngine(spark, path)
     ids = {r["doc_id"] for r in engine.phrase_match_doc_ids("error retry").collect()}
-    new_id = engine._docs.where(F.col("conv_id") == "cnew").collect()[0]["doc_id"]
+    new_id = engine._snap.docs.where(F.col("conv_id") == "cnew").collect()[0]["doc_id"]
     assert new_id in ids
 
 

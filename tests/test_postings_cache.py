@@ -65,7 +65,7 @@ def test_selective_cache_rank_identity(spark, built):
     hot = QueryEngine(spark, built)
     n = hot.cache_postings(top_terms=5)
     assert n > 0
-    assert hot._hot_terms is not None and len(hot._hot_terms) == 5
+    assert hot._snap.hot_terms is not None and len(hot._snap.hot_terms) == 5
     for q in reference_queries():
         for conj in (False, True):
             a = plain.top_k_pdf(q, 10, conj)
@@ -77,12 +77,12 @@ def test_selective_cache_rank_identity(spark, built):
 def test_selective_cache_plan_routing(spark, built):
     eng = QueryEngine(spark, built)
     eng.cache_postings(top_terms=3)
-    hot_term = next(iter(eng._hot_terms))
+    hot_term = next(iter(eng._snap.hot_terms))
     # a cold term: present in the corpus, not in the hot set
     cold_term = next(
         r["term"]
-        for r in eng._term_stats.orderBy("df").limit(50).collect()
-        if r["term"] not in eng._hot_terms
+        for r in eng._snap.term_stats.orderBy("df").limit(50).collect()
+        if r["term"] not in eng._snap.hot_terms
     )
 
     hot_plan = eng._scoring_shards([hot_term])._jdf.queryExecution() \
@@ -149,16 +149,11 @@ def test_default_cache_excludes_positions(spark, tmp_path):
     eng = QueryEngine(spark, path)
     assert eng.meta.get("positions")
     eng.cache_postings()
-    assert "pos_payload" not in eng._postings_hot.columns
-    assert "pos_offsets" not in eng._postings_hot.columns
+    assert "pos_payload" not in eng._snap.postings_hot.columns
+    assert "pos_offsets" not in eng._snap.postings_hot.columns
     # phrase paths still work: they read the uncached full frame
     out = eng.phrase_match_doc_ids("error retry").count()
     assert out >= 0
-
-    # opt-in full pin for phrase-heavy serving keeps all columns
-    eng2 = QueryEngine(spark, path)
-    eng2.cache_postings(include_positions=True)
-    assert "pos_payload" in eng2._postings_hot.columns
 
 
 def test_encode_shard_rejects_anchor_overflow():
@@ -191,12 +186,12 @@ def test_driver_tier_budget_gate_and_identity(spark, built):
     gated.preload_term_stats()
     gated.DRIVER_POSTINGS_CACHE_MAX_BYTES = 0
     gated.cache_postings()
-    assert gated._driver_shards is None
+    assert gated._snap.driver_shards is None
 
     cached = QueryEngine(spark, built)
     cached.preload_term_stats()
     cached.cache_postings()
-    assert cached._driver_shards is not None
+    assert cached._snap.driver_shards is not None
 
     for q in reference_queries()[:12]:
         a = gated.top_k_pdf(q, 10)
@@ -250,9 +245,9 @@ def test_driver_docs_tier_identity(spark, churned):
     join row for row — all six columns, doc_ts included — with the
     same schema, across every local-leg surface that attaches docs."""
     gated = _pinned(spark, churned, budget=0)
-    assert gated._driver_shards is None
+    assert gated._snap.driver_shards is None
     tiered = _pinned(spark, churned)
-    assert tiered._driver_shards is not None
+    assert tiered._snap.driver_shards is not None
 
     calls = [
         (q, lambda e, q=q, c=c: e.top_k(q, 10, c))
@@ -270,7 +265,7 @@ def test_driver_docs_tier_identity(spark, churned):
     ]
     for what, call in calls:
         _same_hits(call(gated), call(tiered), what)
-    assert tiered._driver_docs is not None  # the tier served them
+    assert tiered._snap.memo.driver_docs is not None  # the tier served them
 
     page = tiered.top_k("error retry", 5).collect()
     cursor = (page[-1]["score"], page[-1]["doc_id"])
@@ -296,15 +291,15 @@ def test_driver_docs_tier_jobs_and_budget(spark, churned):
     q = "error retry timeout"
     tiered = _pinned(spark, churned)
     tiered.top_k(q, 10, with_docs=False).collect()
-    assert tiered._driver_docs is None
+    assert tiered._snap.memo.driver_docs is None
     want = tiered.top_k(q, 10)
-    assert tiered._driver_docs is not None
+    assert tiered._snap.memo.driver_docs is not None
     assert _jobs_during(spark, lambda: tiered.top_k(q, 10).collect()) == 0
     # inner-join semantics: an id the docs table lacks is dropped
     import numpy as np
 
     top = want.collect()[0]
-    absent = int(tiered._driver_docs["doc_id"].max()) + 1
+    absent = int(tiered._snap.memo.driver_docs["doc_id"].max()) + 1
     got = tiered._local_hits(
         [np.array([absent, top["doc_id"]])], [np.array([9.0, top["score"]])],
         10, True,
@@ -313,22 +308,22 @@ def test_driver_docs_tier_jobs_and_budget(spark, churned):
 
     payload = sum(
         len(r["payload"] or b"")
-        for rows in tiered._driver_shards.values() for r in rows
+        for rows in tiered._snap.driver_shards.values() for r in rows
     )
     tight = _pinned(spark, churned, budget=payload)
-    assert tight._driver_shards is not None
+    assert tight._snap.driver_shards is not None
     _same_hits(tight.top_k(q, 10), want, "shard tier only")
-    assert tight._driver_docs is None
+    assert tight._snap.memo.driver_docs is None
     assert _jobs_during(spark, lambda: tight.top_k(q, 10).collect()) > 0
 
     tiered.cache_postings()
-    assert tiered._driver_docs is None
+    assert tiered._snap.memo.driver_docs is None
     _same_hits(tiered.top_k(q, 10), want, "re-pinned")
-    assert tiered._driver_docs is not None
+    assert tiered._snap.memo.driver_docs is not None
 
     unpinned = QueryEngine(spark, churned)
     _same_hits(unpinned.top_k(q, 10), want, "unpinned")
-    assert unpinned._driver_docs is None
+    assert unpinned._snap.memo.driver_docs is None
 
 
 def test_driver_docs_tier_concurrent_first_fill(spark, churned):
@@ -365,8 +360,8 @@ def test_driver_docs_tier_concurrent_first_fill(spark, churned):
     assert not any(t.is_alive() for t in threads)
     assert not errors, errors
     assert got == want
-    assert eng._driver_docs is not None
-    assert eng._driver_docs_room is None
+    assert eng._snap.memo.driver_docs is not None
+    assert eng._snap.memo.driver_docs_room is None
 
 
 def test_route_identity_across_legs(spark, churned):
@@ -378,15 +373,15 @@ def test_route_identity_across_legs(spark, churned):
     extra fields, so multi_match runs its three types over "text";
     the field-tagged cases are covered in test_multifield."""
     pinned = _pinned(spark, churned)
-    assert pinned._driver_shards is not None
+    assert pinned._snap.driver_shards is not None
     collected = _pinned(spark, churned, budget=0)
-    assert collected._driver_shards is None
+    assert collected._snap.driver_shards is None
     dist = QueryEngine(spark, churned)
     dist.preload_term_stats()
     dist.LOCAL_PATH_MAX_POSTINGS = 0
     cogroup = QueryEngine(spark, churned, max_driver_deletes=0)
     cogroup.preload_term_stats()
-    assert cogroup._deletes is None
+    assert cogroup._snap.deletes is None
 
     q = "error retry timeout"
     sets = {

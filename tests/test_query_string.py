@@ -85,8 +85,8 @@ def built(spark, tmp_path_factory):
     texts = (
         materialize_documents(turns)
         .select("conv_id", "doc_text")
-        .join(engine._docs.select("doc_id", "conv_id"), "conv_id")
-        .select("doc_id", engine._docs.conv_id, "doc_text")
+        .join(engine._snap.docs.select("doc_id", "conv_id"), "conv_id")
+        .select("doc_id", engine._snap.docs.conv_id, "doc_text")
         .withColumnRenamed("doc_text", "text")
     )
     return engine, texts

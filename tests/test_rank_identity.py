@@ -39,14 +39,14 @@ def test_global_stats_match(built):
 
 def test_doc_ids_match_oracle(built):
     engine, oracle, _ = built
-    docs = engine._docs.orderBy("doc_id").toPandas()
+    docs = engine._snap.docs.orderBy("doc_id").toPandas()
     assert list(docs["doc_id"]) == list(range(oracle.n_docs))
     assert list(docs["conv_id"]) == list(oracle.docs["conv_id"])
 
 
 def test_df_matches_oracle(built):
     engine, oracle, _ = built
-    df = {r["term"]: r["df"] for r in engine._term_stats.collect()}
+    df = {r["term"]: r["df"] for r in engine._snap.term_stats.collect()}
     assert df == dict(oracle.df)
 
 

@@ -16,9 +16,14 @@ driver shard rows of every unchanged postings file.  These tests pin
 - concurrency: engines opened, pinned and queried from several threads
   while a writer appends return what a serial engine on the same
   snapshot returns;
-- the typed empty answer is built once per schema and engine.
+- the typed empty answer is built once per schema and engine;
+- one snapshot: a re-pin never tears a query in flight on the same
+  engine, queries beside a looping re-pin return the serial answers,
+  and no engine method assigns state other than the snapshot.
 """
 
+import ast
+import inspect
 import sys
 import threading
 import uuid
@@ -29,8 +34,9 @@ import pytest
 from sotohp_spark import fsio
 from sotohp_spark.config import EngineConfig
 from sotohp_spark.generator import generate_transcripts_pdf, reference_queries
-from sotohp_spark.index import IndexBuilder, QueryEngine
+from sotohp_spark.index import Bool, IndexBuilder, QueryEngine
 from sotohp_spark.index import query as query_mod
+from sotohp_spark.index import reader
 from sotohp_spark.streaming.incremental import (
     append_conversations,
     compact_buckets,
@@ -64,8 +70,8 @@ def _pinned(spark, path):
 
 def _cold_pinned(spark, path):
     """A pinned engine that builds everything itself."""
-    with query_mod._REUSE_LOCK:
-        query_mod._REUSE.clear()
+    with reader._REUSE_LOCK:
+        reader._REUSE.clear()
     return _pinned(spark, path)
 
 
@@ -126,8 +132,8 @@ def test_reuse_identity_through_the_lifecycle(spark, tmp_path):
         if what != "delete":  # every other step writes postings files
             assert _postings_files(spark, path) != before, what
         reused = _pinned(spark, path)
-        held = {id(f) for e in live for f in e._driver_shards._held}
-        shared = [f for f in reused._driver_shards._held if id(f) in held]
+        held = {id(f) for e in live for f in e._snap.driver_shards._held}
+        shared = [f for f in reused._snap.driver_shards._held if id(f) in held]
         if what in ("append", "delete"):  # unchanged files are reused
             assert shared, what
         cold = _cold_pinned(spark, path)
@@ -166,7 +172,7 @@ def test_unchanged_refresh_runs_no_spark_job(spark, churned):
     live = _pinned(spark, churned)
     jobs, eng = _jobs_during(spark, lambda: _pinned(spark, churned))
     assert jobs == 0
-    assert eng._deletes is not None and eng._deletes.size == 3
+    assert eng._snap.deletes is not None and eng._snap.deletes.size == 3
     q = "error retry timeout"
     assert eng.top_k(q, 10).collect() == live.top_k(q, 10).collect()
 
@@ -187,12 +193,12 @@ def test_pin_after_append_reads_only_appended_files(spark, tmp_path,
 
     eng = QueryEngine(spark, path)
     eng.preload_term_stats()
-    frame_cls = type(eng._postings)
+    frame_cls = type(eng._snap.postings)
     collect = frame_cls.collect
     read = set()
 
     def recording_collect(df):
-        read.update(query_mod._rel_path(u, "postings")
+        read.update(reader._rel_path(u, "postings")
                     for u in df.inputFiles() if "/postings/" in u)
         return collect(df)
 
@@ -203,8 +209,8 @@ def test_pin_after_append_reads_only_appended_files(spark, tmp_path,
     assert read == appended
     cold = _cold_pinned(spark, path)
     assert n == cold.cache_postings()
-    held = {id(f) for f in live._driver_shards._held}
-    assert sum(id(f) in held for f in eng._driver_shards._held) == len(before)
+    held = {id(f) for f in live._snap.driver_shards._held}
+    assert sum(id(f) in held for f in eng._snap.driver_shards._held) == len(before)
     q = "error retry timeout"
     assert eng.top_k(q, 10).collect() == cold.top_k(q, 10).collect()
 
@@ -330,12 +336,171 @@ def test_empty_answers_build_one_frame_per_schema(spark, churned,
         return create(data, *args, **kwargs)
 
     monkeypatch.setattr(spark, "createDataFrame", counting)
+    absent = "qqzzxxnotaterm"
+    sets = [
+        (["doc_id"], lambda: eng.matching_doc_ids(absent)),
+        (["doc_id", "dl"], lambda: eng.matching_doc_ids(absent, with_dl=True)),
+        (["query_id", "doc_id"], lambda: eng.matching_doc_ids_batch(
+            [("q", absent)])),
+        (["doc_id"], lambda: eng.match_phrase_prefix_doc_ids("")),
+    ]
     schemas = {}
     for _ in range(3):
         for with_docs in (False, True):
-            df = eng.top_k("qqzzxxnotaterm", 10, with_docs=with_docs)
+            df = eng.top_k(absent, 10, with_docs=with_docs)
             assert df.collect() == []
             assert schemas.setdefault(with_docs, df.schema) == df.schema
-    assert len(calls) <= 2
+        for names, call in sets:
+            df = call()
+            assert df.collect() == []
+            assert df.schema.names == names
+    assert len(calls) <= 2 + 3  # match_phrase_prefix shares "doc_id long"
     assert schemas[False].names == ["doc_id", "score"]
     assert tuple(schemas[True].names) == query_mod.HITS_COLUMNS
+
+
+def test_matching_doc_ids_builds_only_its_answer(spark, churned,
+                                                 monkeypatch):
+    """A non-empty answer on the driver-local leg is one frame: no empty
+    frame is built beside it."""
+    eng = _pinned(spark, churned)
+    q = "error retry"
+    want = eng.matching_doc_ids(q).collect()
+    calls = []
+    create = spark.createDataFrame
+
+    def counting(data, *args, **kwargs):
+        calls.append(data)
+        return create(data, *args, **kwargs)
+
+    monkeypatch.setattr(spark, "createDataFrame", counting)
+    df = eng.matching_doc_ids(q)
+    monkeypatch.undo()
+    assert want and sorted(df.collect()) == sorted(want)
+    assert len(calls) == 1
+
+
+def test_repin_does_not_tear_a_query_in_flight(spark, churned, monkeypatch):
+    """A query that runs on the same engine while cache_postings builds
+    its selective pin reads the snapshot it started with: the pre-pin
+    rows, never a half-published pin."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    eng = QueryEngine(spark, churned)
+    q = "error retry"
+    want = eng.top_k(q, 5, with_docs=False).collect()
+    cache = DataFrame.cache
+    got = []
+
+    def caching(df):
+        if not got:
+            got.append(None)
+            got[0] = eng.top_k(q, 5, with_docs=False).collect()
+        return cache(df)
+
+    monkeypatch.setattr(DataFrame, "cache", caching)
+    eng.cache_postings(top_terms=3)
+    monkeypatch.undo()
+    assert got == [want]
+    assert eng.top_k(q, 5, with_docs=False).collect() == want
+
+
+def test_queries_beside_repins_return_the_serial_answers(spark, churned):
+    """Four client threads query one engine while a fifth re-pins it in
+    a loop (full pin, selective pin, dictionary preload).  Every answer
+    must equal the serial one, with no exception."""
+    queries = ["error retry", "tool call", "timeout"]
+    bool_q = Bool(must=["error"], should=["retry timeout"])
+
+    def answers(eng):
+        out = {"bool": eng.top_k_bool(bool_q, 10).collect()}
+        for q in queries:
+            out[q, "ids"] = eng.top_k(q, 10, with_docs=False).collect()
+            out[q, "hits"] = eng.top_k(q, 10).collect()
+            out[q, "set"] = sorted(eng.matching_doc_ids(q).collect())
+        return out
+
+    want = answers(_pinned(spark, churned))
+    eng = QueryEngine(spark, churned)
+    seen, errors = [], []
+    done = threading.Event()
+
+    def client():
+        try:
+            for _ in range(2):
+                seen.append(answers(eng))
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    def pinner():
+        try:
+            while not done.is_set():
+                eng.cache_postings()
+                eng.cache_postings(top_terms=5)
+                eng.preload_term_stats()
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        clients = [threading.Thread(target=client) for _ in range(4)]
+        pin = threading.Thread(target=pinner)
+        for t in [pin, *clients]:
+            t.start()
+        for t in clients:
+            t.join(timeout=600)
+        done.set()
+        pin.join(timeout=600)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in [pin, *clients])
+    assert not errors, errors
+    assert len(seen) == 8
+    for got in seen:
+        assert got == want
+
+
+def _self_assignments(fn) -> set:
+    """Engine attributes ``fn`` assigns: plain, augmented and subscript
+    targets on ``self`` (tuple targets unpacked)."""
+    out = set()
+    for node in ast.walk(fn):
+        if isinstance(node, ast.Assign):
+            targets = list(node.targets)
+        elif isinstance(node, (ast.AugAssign, ast.AnnAssign)):
+            targets = [node.target]
+        else:
+            continue
+        while targets:
+            t = targets.pop()
+            if isinstance(t, (ast.Tuple, ast.List)):
+                targets += t.elts
+                continue
+            if isinstance(t, ast.Starred):
+                targets.append(t.value)
+                continue
+            while isinstance(t, ast.Subscript):
+                t = t.value
+            if (isinstance(t, ast.Attribute) and isinstance(t.value, ast.Name)
+                    and t.value.id == "self"):
+                out.add(t.attr)
+    return out
+
+
+def test_engine_state_is_one_snapshot():
+    """After __init__ no QueryEngine method assigns engine state other
+    than the snapshot and the two per-call attributes; __init__ sets
+    only the open's inputs and those."""
+    tree = ast.parse(inspect.getsource(query_mod))
+    cls = next(n for n in tree.body
+               if isinstance(n, ast.ClassDef) and n.name == "QueryEngine")
+    per_call = {"_snap", "_shared_bc", "last_query_stats"}
+    opened = {"spark", "rules", "store", "path", "cfg", "_app",
+              "_local_gate", "MAX_DRIVER_DELETES"}
+    methods = [f for f in cls.body
+               if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))]
+    assert any(f.name == "__init__" for f in methods)
+    for f in methods:
+        allowed = per_call | opened if f.name == "__init__" else per_call
+        assert _self_assignments(f) <= allowed, f.name

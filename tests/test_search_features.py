@@ -123,7 +123,7 @@ def test_more_like_this_matches_brute_derivation(spark, tmp_path):
     # the engine's doc_id <-> fixture-index mapping through conv_id
     id_of = {
         int(r["conv_id"][1:]): r["doc_id"]
-        for r in engine._docs.select("doc_id", "conv_id").collect()
+        for r in engine._snap.docs.select("doc_id", "conv_id").collect()
     }
     doc_of = {v: k for k, v in id_of.items()}
     src_i = 1  # "retry retry retry error" — its head terms overlap others
@@ -223,7 +223,7 @@ def test_must_not_excludes_matching_docs(spark, tmp_path):
     conv_text = {f"c{i:03d}": t for i, t in enumerate(TEXTS)}
     texts_by_doc = {
         r["doc_id"]: conv_text[r["conv_id"]]
-        for r in engine._docs.select("doc_id", "conv_id").collect()
+        for r in engine._snap.docs.select("doc_id", "conv_id").collect()
     }
     for conj in (False, True):
         base = engine.top_k(
@@ -303,7 +303,7 @@ def test_fuzzy_expand_and_topk_match_brute(spark, tmp_path):
     # --- ranked results vs brute ---
     id_of = {
         int(r["conv_id"][1:]): r["doc_id"]
-        for r in engine._docs.select("doc_id", "conv_id").collect()
+        for r in engine._snap.docs.select("doc_id", "conv_id").collect()
     }
     n = len(docs)
 
@@ -391,7 +391,7 @@ def test_hybrid_rrf_matches_brute(spark):
 def test_highlight_wraps_whole_words_only(spark, tmp_path):
     engine = _fixture(spark, tmp_path)
     conv_text = {f"c{i:03d}": t for i, t in enumerate(TEXTS)}
-    texts = engine._docs.select("doc_id", "conv_id").withColumn(
+    texts = engine._snap.docs.select("doc_id", "conv_id").withColumn(
         "text",
         F.udf(lambda c: conv_text[c])("conv_id"),
     )
@@ -496,7 +496,7 @@ def test_top_k_recent_orders_by_time(spark, tmp_path):
     )
     id_of = {
         r["conv_id"]: r["doc_id"]
-        for r in engine._docs.select("doc_id", "conv_id").collect()
+        for r in engine._snap.docs.select("doc_id", "conv_id").collect()
     }
     match = [
         c for c, (ts, t) in all_texts.items()
@@ -533,7 +533,7 @@ def test_explain_decomposes_topk_score(spark, tmp_path):
     docs = [Counter(tokenize(t)) for t in TEXTS]
     id_of = {
         int(r["conv_id"][1:]): r["doc_id"]
-        for r in engine._docs.select("doc_id", "conv_id").collect()
+        for r in engine._snap.docs.select("doc_id", "conv_id").collect()
     }
     rows = engine.explain("error retry redis", id_of[0]).collect()
     by_term = {x["term"]: x for x in rows}
@@ -619,7 +619,7 @@ def test_percolate_matches_brute(spark, tmp_path):
     ]
     id_of = {
         int(r["conv_id"][1:]): r["doc_id"]
-        for r in engine._docs.select("doc_id", "conv_id").collect()
+        for r in engine._snap.docs.select("doc_id", "conv_id").collect()
     }
     expect = set()
     for qid, text in queries:
@@ -636,7 +636,7 @@ def test_percolate_matches_brute(spark, tmp_path):
     assert got == expect, (got ^ expect)
     assert not any(q in ("q_absent", "q_dropped") for _, q in got)
     # batch restriction: only docs in the passed frame are percolated
-    batch = engine._docs_raw.where(F.col("doc_id") == id_of[0])
+    batch = engine._snap.docs_raw.where(F.col("doc_id") == id_of[0])
     got_b = {
         (r["doc_id"], r["query_id"])
         for r in engine.percolate(queries, docs=batch).collect()
@@ -678,7 +678,7 @@ def test_percolate_registered_matches_per_call(spark, tmp_path):
     assert got2 == want
     # batch restriction
     some_doc = sorted(d for d, _ in want)[0]
-    batch = engine._docs_raw.where(F.col("doc_id") == some_doc)
+    batch = engine._snap.docs_raw.where(F.col("doc_id") == some_doc)
     got_b = {
         (r["doc_id"], r["query_id"])
         for r in engine.percolate_registered(
@@ -726,7 +726,7 @@ def test_min_should_match_n_of_m(spark, tmp_path):
     conv_text = {f"c{i:03d}": t for i, t in enumerate(TEXTS)}
     texts_by_doc = {
         r["doc_id"]: conv_text[r["conv_id"]]
-        for r in engine._docs.select("doc_id", "conv_id").collect()
+        for r in engine._snap.docs.select("doc_id", "conv_id").collect()
     }
     query = "redis error retry"
     qterms = set(tokenize(query))
@@ -788,7 +788,7 @@ def test_term_vectors_matches_brute(spark, tmp_path):
     conv_text = {f"c{i:03d}": t for i, t in enumerate(TEXTS)}
     id_of = {
         conv_text[r["conv_id"]]: r["doc_id"]
-        for r in engine._docs.select("doc_id", "conv_id").collect()
+        for r in engine._snap.docs.select("doc_id", "conv_id").collect()
     }
     target = TEXTS[7]  # "restart loop detected error retry"
     doc_id = id_of[target]
@@ -849,7 +849,7 @@ def test_scored_matches_and_collapse(spark, tmp_path):
     # collapse: fixture docs land in 3 distinct months (i % 3)
     meta = {
         r["doc_id"]: (r["conv_id"], r["doc_ts"])
-        for r in engine._docs.select("doc_id", "conv_id", "doc_ts").collect()
+        for r in engine._snap.docs.select("doc_id", "conv_id", "doc_ts").collect()
     }
     best_by_month: dict = {}
     for d, s in base.items():
@@ -883,7 +883,7 @@ def test_top_k_decay_matches_brute(spark, tmp_path):
     }
     meta = {
         r["doc_id"]: r["doc_ts"]
-        for r in engine._docs.select("doc_id", "doc_ts").collect()
+        for r in engine._snap.docs.select("doc_id", "doc_ts").collect()
     }
     origin = TS + datetime.timedelta(days=45)
     hl = 20.0
@@ -930,7 +930,7 @@ def test_rescore_phrase_window(spark, tmp_path):
     conv_text = {f"c{i:03d}": t for i, t in enumerate(TEXTS)}
     texts_by_doc = {
         r["doc_id"]: conv_text[r["conv_id"]]
-        for r in engine._docs.select("doc_id", "conv_id").collect()
+        for r in engine._snap.docs.select("doc_id", "conv_id").collect()
     }
     texts = spark.createDataFrame(
         [(d, t) for d, t in texts_by_doc.items()], "doc_id long, text string"
@@ -1016,7 +1016,7 @@ def test_wildcard_expand_and_topk(spark, tmp_path):
     conv_text = {f"c{i:03d}": t for i, t in enumerate(TEXTS)}
     idx_of = {
         r["doc_id"]: int(r["conv_id"][1:])
-        for r in engine._docs.select("doc_id", "conv_id").collect()
+        for r in engine._snap.docs.select("doc_id", "conv_id").collect()
     }
     got_rank = [
         (idx_of[r["doc_id"]], r["score"])
@@ -1029,7 +1029,7 @@ def test_wildcard_expand_and_topk(spark, tmp_path):
     assert engine.top_k_wildcard("zzq*", k=5).count() == 0
     # prefix pushdown reaches the dictionary scan
     plan = (
-        engine._term_stats.where(F.col("term").startswith("re"))
+        engine._snap.term_stats.where(F.col("term").startswith("re"))
         .where(F.col("term").rlike("^re.*$"))
         ._jdf.queryExecution().executedPlan().toString()
     )
@@ -1085,7 +1085,7 @@ def test_msearch_merges_per_index_topk(spark, tmp_path):
         eng = dict(engines)[name]
         id_of = {
             int(r["conv_id"][1:]): r["doc_id"]
-            for r in eng._docs.select("doc_id", "conv_id").collect()
+            for r in eng._snap.docs.select("doc_id", "conv_id").collect()
         }
         expect.extend((name, id_of[i], s) for i, s in local)
     expect.sort(key=lambda x: (-x[2], x[0], x[1]))
@@ -1117,7 +1117,7 @@ def test_collapse_week_bucketing(spark, tmp_path):
     }
     meta = {
         r["doc_id"]: r["doc_ts"]
-        for r in engine._docs.select("doc_id", "doc_ts").collect()
+        for r in engine._snap.docs.select("doc_id", "doc_ts").collect()
     }
     best: dict = {}
     for d, s in base.items():
@@ -1254,7 +1254,7 @@ def test_regexp_expand_and_topk(spark, tmp_path):
     assert [(r.doc_id, r.score) for r in a] == [
         (r.doc_id, r.score) for r in b]
     plan = (
-        engine._term_stats
+        engine._snap.term_stats
         .where(F.col("term").startswith("re"))
         ._jdf.queryExecution().executedPlan().toString()
     )
@@ -1327,7 +1327,7 @@ def test_percolate_corpus_default_excludes_tombstones(spark, tmp_path):
     }
     assert before
     victim = sorted(before)[0]
-    conv = engine._docs.where(F.col("doc_id") == victim).collect()[0][
+    conv = engine._snap.docs.where(F.col("doc_id") == victim).collect()[0][
         "conv_id"
     ]
     delete_conversations(spark, engine.path, [conv])
@@ -1353,7 +1353,7 @@ def test_explain_and_mlt_honor_tombstones(spark, tmp_path):
     victim = engine.top_k("error retry", 1, with_docs=False).collect()[
         0]["doc_id"]
     assert engine.explain("error retry", victim).count() > 0
-    conv = engine._docs.where(F.col("doc_id") == victim).collect()[0][
+    conv = engine._snap.docs.where(F.col("doc_id") == victim).collect()[0][
         "conv_id"]
     delete_conversations(spark, engine.path, [conv])
     for max_driver in (None, 0):  # driver-set tier / distributed tier
@@ -1375,7 +1375,7 @@ def test_highlight_accepts_bool_queries(spark, tmp_path):
     # doc ids are TIME-ordered by the build: map through conv_id
     text_of = {
         r["doc_id"]: TEXTS[int(r["conv_id"][1:])]
-        for r in engine._docs.select("doc_id", "conv_id").collect()
+        for r in engine._snap.docs.select("doc_id", "conv_id").collect()
     }
     texts = spark.createDataFrame(
         [(d, t) for d, t in text_of.items()], "doc_id long, text string"

@@ -49,7 +49,7 @@ def test_batch_percolate_matches_registered(spark, setup):
     }
     id_map = {
         r.doc_id: r.conv_id
-        for r in engine._docs.select("doc_id", "conv_id").collect()
+        for r in engine._snap.docs.select("doc_id", "conv_id").collect()
     }
     want = {
         (id_map[r.doc_id], r.query_id)
