@@ -204,13 +204,14 @@ class QueryEngine:
         An engine holds one immutable snapshot (index/reader.py),
         opened here: meta after recovery, the directory readers, the
         postings masked to the committed ``max_doc``, the docs
-        projections and the tombstones.  Queries read it once and keep
-        it; preload_term_stats and cache_postings publish a new one
-        with one assignment, so they never tear a query in flight.  On
-        the parquet leg a refresh (a new engine over the same index)
-        reuses what live engines built from unchanged files — readers,
-        term dictionary, tombstones, shard rows — so opening over an
-        unchanged index runs no Spark job."""
+        projections and the tombstones.  Queries load it once per
+        method and keep it; preload_term_stats and cache_postings
+        publish a new one with one assignment, one at a time, so they
+        never tear a query in flight.  On the parquet leg a refresh (a
+        new engine over the same index) reuses what live engines built
+        from unchanged files — readers, term dictionary, tombstones,
+        shard rows — so opening over an unchanged index runs no Spark
+        job."""
         self.spark = spark
         self.rules = rules
         if store is None and index_path is not None:
@@ -260,6 +261,11 @@ class QueryEngine:
         # scoring, which shares executors via FAIR pools.  Non-blocking
         # acquire = routing decision, never a wait.
         self._local_gate = threading.BoundedSemaphore(1)
+        # serializes the publishers (cache_postings, preload_term_stats):
+        # each reads the current snapshot and publishes one built from
+        # it, so two running at once would drop one's update.  Queries
+        # never take it.
+        self._publish = threading.Lock()
         # the latest ``shared`` table _apply_per_range broadcast (see
         # there); None until a distributed batch call runs
         self._shared_bc = None
@@ -388,12 +394,14 @@ class QueryEngine:
 
         Publishes the pinned snapshot with one assignment: a query in
         flight finishes on the one it started with; the term, window
-        and positional memos pass on.  Returns the number of cached
+        and positional memos pass on.  Pins and preload_term_stats on
+        one engine run one at a time.  Returns the number of cached
         shard rows.  Re-invocation releases the previous pin first."""
-        self._snap, n = reader.pin(
-            self._snap, self.spark, self.path, top_terms,
-            self.DRIVER_POSTINGS_CACHE_MAX_BYTES,
-        )
+        with self._publish:
+            self._snap, n = reader.pin(
+                self._snap, self.spark, self.path, top_terms,
+                self.DRIVER_POSTINGS_CACHE_MAX_BYTES,
+            )
         return n
 
     def _scoring_shards(self, terms) -> DataFrame:
@@ -424,8 +432,10 @@ class QueryEngine:
         """Pull term->df to the driver (the search head's dictionary
         cache).  Vocabulary is O(distinct terms) — fine up to tens of
         millions; beyond that leave it off and pay one pruned parquet
-        lookup per query.  Publishes a new snapshot carrying it."""
-        self._snap = snap = reader.preload(self._snap)
+        lookup per query.  Publishes a new snapshot carrying it, after
+        any pin in progress on this engine."""
+        with self._publish:
+            self._snap = snap = reader.preload(self._snap)
         return len(snap.df_cache)
 
     def _coerce_ts(self, v):
@@ -4049,7 +4059,8 @@ class QueryEngine:
         top_k plan."""
         # ES: a deleted `like` doc is NOT FOUND — its stored tf map
         # must not seed the query
-        lookup = self._live_doc_row(self._snap, doc_id)
+        snap = self._snap
+        lookup = self._live_doc_row(snap, doc_id)
         if lookup is None:
             raise ValueError(f"doc_id {doc_id} is deleted")
         row = lookup.select("tfs").collect()

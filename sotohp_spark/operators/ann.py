@@ -734,11 +734,10 @@ def embedding_neardup_ivf(
     """IVF-probed near-duplicate pairs: candidates are vector pairs
     sharing at least one of each vector's ``n_probe`` nearest
     centroids; exact cosine over the candidates keeps precision at
-    1.0 (only recall is approximate — like the SRP-LSH variant
-    ``embedding_neardup_pairs``, but the buckets follow the DATA
-    distribution (Voronoi cells of the trained centroids) instead of
-    fixed random hyperplanes, so dense regions split and sparse
-    regions pool).
+    1.0 (only recall is approximate).  Unlike SRP-LSH buckets, the
+    cells follow the DATA distribution (Voronoi cells of the trained
+    centroids) instead of fixed random hyperplanes, so dense regions
+    split and sparse regions pool.
 
     Multi-probe matters for dedup specifically: a near-dup pair
     straddling a cell boundary is recovered when either member's

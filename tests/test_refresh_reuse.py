@@ -18,8 +18,9 @@ driver shard rows of every unchanged postings file.  These tests pin
   snapshot returns;
 - the typed empty answer is built once per schema and engine;
 - one snapshot: a re-pin never tears a query in flight on the same
-  engine, queries beside a looping re-pin return the serial answers,
-  and no engine method assigns state other than the snapshot.
+  engine, a preload started during a pin keeps both updates, queries
+  beside a looping re-pin return the serial answers, and no engine
+  method assigns state other than the snapshot.
 """
 
 import ast
@@ -405,6 +406,40 @@ def test_repin_does_not_tear_a_query_in_flight(spark, churned, monkeypatch):
     assert eng.top_k(q, 5, with_docs=False).collect() == want
 
 
+def test_preload_during_a_pin_keeps_both(spark, churned, monkeypatch):
+    """A dictionary preload started while cache_postings builds its
+    selective pin on the same engine waits for it: the engine ends up
+    with the pin and the dictionary, neither update lost."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    eng = QueryEngine(spark, churned)
+    cache = DataFrame.cache
+    errors = []
+
+    def preload():
+        try:
+            eng.preload_term_stats()
+        except Exception as e:  # reported below
+            errors.append(e)
+
+    other = threading.Thread(target=preload)
+
+    def caching(df):
+        if other.ident is None:
+            other.start()
+            # long enough for an unserialized preload to publish first
+            other.join(timeout=5)
+        return cache(df)
+
+    monkeypatch.setattr(DataFrame, "cache", caching)
+    eng.cache_postings(top_terms=3)
+    monkeypatch.undo()
+    other.join(timeout=600)
+    assert not other.is_alive() and not errors, errors
+    assert eng._snap.hot_terms is not None and len(eng._snap.hot_terms) == 3
+    assert eng._snap.df_cache
+
+
 def test_queries_beside_repins_return_the_serial_answers(spark, churned):
     """Four client threads query one engine while a fifth re-pins it in
     a loop (full pin, selective pin, dictionary preload).  Every answer
@@ -496,8 +531,8 @@ def test_engine_state_is_one_snapshot():
     cls = next(n for n in tree.body
                if isinstance(n, ast.ClassDef) and n.name == "QueryEngine")
     per_call = {"_snap", "_shared_bc", "last_query_stats"}
-    opened = {"spark", "rules", "store", "path", "cfg", "_app",
-              "_local_gate", "MAX_DRIVER_DELETES"}
+    opened = {"spark", "rules", "store", "path", "cfg", "_local_gate",
+              "_publish", "MAX_DRIVER_DELETES"}
     methods = [f for f in cls.body
                if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))]
     assert any(f.name == "__init__" for f in methods)

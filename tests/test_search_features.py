@@ -170,6 +170,28 @@ def test_more_like_this_matches_brute_derivation(spark, tmp_path):
         pass
 
 
+def test_more_like_this_of_a_termless_doc_is_a_typed_empty(spark, tmp_path):
+    """A source doc with no indexed terms (an empty turn) seeds no
+    query: the answer is the empty top-k frame with its schema."""
+    from sotohp_spark.index.reader import TOPK_SCHEMA
+
+    turns = spark.createDataFrame(
+        [("c000", 0, TS, TEXTS[0]), ("c001", 0, TS, "")],
+        "conv_id string, turn_idx int, ts timestamp, text string",
+    )
+    path = str(tmp_path / "termless_idx")
+    cfg = EngineConfig(
+        range_size=4, block_size=2, ranges_per_batch=2, shuffle_partitions=4
+    )
+    IndexBuilder(spark, path, cfg).build(turns, input_fingerprint="termless")
+    engine = QueryEngine(spark, path)
+    src = engine._snap.docs.where(F.col("conv_id") == "c001").collect()
+    assert len(src) == 1 and src[0]["doc_len"] == 0
+    df = engine.more_like_this(src[0]["doc_id"], k=5)
+    assert df.collect() == []
+    assert df.schema == TOPK_SCHEMA
+
+
 def test_search_after_pages_stitch_to_full_ranking(spark, tmp_path):
     """Deep pagination: walking pages of size p via search_after must
     reproduce top_k(k=ALL) exactly (ids and float64 scores), on both
